@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from arrow_supercluster_spark.functions.partitioning import spread
 from arrow_supercluster_spark.functions.checkpoint import truncate
+from arrow_supercluster_spark.functions.small_side import small_side
 
 
 def normalize_text(c) -> "F.Column":
@@ -435,16 +436,21 @@ def connected_components_adaptive(
     list fits comfortably on the driver (≤ small_threshold edges), a
     local union-find labels it in microseconds instead of a multi-round
     distributed fixpoint (each round = 3 shuffles + 2 jobs). The caller
-    doesn't know the size in advance — count first (cheap: edges are two
-    longs), then pick. At 100 TB the dup-graph edge lists that reach this
-    operator are already contracted (LSH buckets, coarse cluster levels),
-    so the fast path fires exactly when the fixpoint overhead would
-    dominate; genuinely large graphs still take the distributed path."""
-    n = pairs.count()
-    if n > small_threshold:
+    doesn't know the size in advance — `small_side` fetches at most
+    small_threshold + 1 edges in one job, and that fetch is both the size
+    test and the union-find input. At 100 TB the dup-graph edge lists
+    that reach this operator are already contracted (LSH buckets, coarse
+    cluster levels), so the fast path fires exactly when the fixpoint
+    overhead would dominate; genuinely large graphs still take the
+    distributed path."""
+    tbl = small_side(
+        pairs.select(F.col(a).cast("long"), F.col(b).cast("long")),
+        small_threshold,
+    )
+    if tbl is None:
         return connected_components(pairs, a, b)
     spark = pairs.sparkSession
-    rows = pairs.select(F.col(a).cast("long"), F.col(b).cast("long")).collect()
+    rows = zip(tbl.column(0).to_pylist(), tbl.column(1).to_pylist())
     parent: dict = {}
 
     def find(x: int) -> int:

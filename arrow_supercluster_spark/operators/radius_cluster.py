@@ -29,39 +29,55 @@ Execution shape (the 100 TB story): items get a cell key at size exactly
 r; the candidate join is an equi-join on the 3×3 neighbor cells (the
 relational KDBush range query, SURVEY §1.1 spatial-index row) followed by
 the exact distance predicate; then two hash aggregations (argmin origin,
-cluster rollup) and one self-join for validity. No Python, no recursion,
-no driver data. Per-level input of the hierarchy loop is the previous
-level's clusters (exponentially shrinking), so pair fan-out stays bounded
-even at low zooms.
+cluster rollup) and one self-join for validity. No Python, no recursion.
+Per-level input of the hierarchy loop is the previous level's clusters
+(exponentially shrinking), so pair fan-out stays bounded even at low
+zooms.
+
+Driver tail: each level of the hierarchy loop costs a pair join, four
+aggregations and a checkpoint job however few items it holds, so once a
+level has at most `_DRIVER_LEVEL_CAP` items (one bounded `small_side`
+collect decides), every remaining zoom runs in NumPy with the same
+candidate set (cell key floor(x / r), 3×3 neighbor cells, the float64
+dx·dx + dy·dy <= r·r test) and the same min-order-neighbor rules, and the
+result goes back as one createDataFrame. Candidate pairs are evaluated in
+chunks of `_PAIR_CHUNK` with per-item running minima, so driver memory
+is O(items + chunk) whatever the pair fan-out.
 """
 
 from __future__ import annotations
+
+import numpy as np
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from arrow_supercluster_spark.config import DEFAULT_OPTIONS, ClusterOptions
+from arrow_supercluster_spark.functions.small_side import small_side
+
+# A level with at most this many items finishes the hierarchy on the
+# driver (the bound of connected_components_adaptive's union-find fast
+# path).
+_DRIVER_LEVEL_CAP = 200_000
+# Candidate pairs evaluated per NumPy chunk in the driver tail: about a
+# dozen int64/float64 temporaries of this length are live at once.
+_PAIR_CHUNK = 1 << 20
+_NO_NEIGHBOR = np.iinfo(np.int64).max
+
+_SCHEMA = "zoom int, id long, x double, y double, num_points long, is_cluster boolean"
 
 
-def _neighbor_pairs(items: DataFrame, r: float, right_items: DataFrame | None = None) -> DataFrame:
+def _neighbor_pairs(items: DataFrame, r: float) -> DataFrame:
     """(a_id, a_ord, b_id …) pairs with dist ≤ r via 3×3 cell equi-join.
 
     Each left item is replicated into its 9 neighbor cells (explode of a
     constant 3×3 offset array — a narrow map), then equi-joined against
-    right items on the cell key: the relational form of a KDBush
-    within() query. Both sides shuffle once on the cell key.
-
-    `right_items` (default: the left side) lets a caller restrict the
-    candidate set to a subset of items.  (radius_cluster_level used this
-    in r10 for its assignment pass; r11 replaced that second neighbor
-    join with a semi-join on the first derivation's pair table — see the
-    step-4 note there — so the parameter is now API surface for external
-    callers only.)"""
-    if right_items is None:
-        right_items = items
+    the items on the cell key: the relational form of a KDBush within()
+    query. Both sides shuffle once on the cell key."""
     cx = F.floor(F.col("x") / F.lit(r))
     cy = F.floor(F.col("y") / F.lit(r))
-    right = right_items.select(
+    right = items.select(
         F.col("id").alias("b_id"),
         F.col("x").alias("b_x"),
         F.col("y").alias("b_y"),
@@ -162,16 +178,190 @@ def radius_cluster_level(
     return clusters.unionByName(singles)
 
 
+def _rank(sorted_vals: np.ndarray, q: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Position of each q in `sorted_vals`, and whether it is there."""
+    i = np.searchsorted(sorted_vals, q)
+    hit = i < len(sorted_vals)
+    hit[hit] = sorted_vals[i[hit]] == q[hit]
+    return i, hit
+
+
+def _row_minima(
+    ax: np.ndarray, ay: np.ndarray, bx: np.ndarray, by: np.ndarray, bval: np.ndarray,
+    r2: float, a: np.ndarray, start: np.ndarray, lens: np.ndarray,
+) -> np.ndarray:
+    """Per row k: the minimum `bval[b]` over b in [start[k], start[k] +
+    lens[k]) with d²(a[k], b) <= r2, else _NO_NEIGHBOR.  Rows are
+    expanded to candidate pairs at most `_PAIR_CHUNK` at a time."""
+    res = np.empty(len(a), dtype=np.int64)
+    ends = np.cumsum(lens)
+    lo = 0
+    while lo < len(a):
+        done = ends[lo - 1] if lo else 0
+        hi = max(int(np.searchsorted(ends, done + _PAIR_CHUNK, side="right")), lo + 1)
+        n = lens[lo:hi]
+        seg = np.zeros(hi - lo, dtype=np.int64)
+        np.cumsum(n[:-1], out=seg[1:])
+        b = np.repeat(start[lo:hi] - seg, n) + np.arange(int(ends[hi - 1] - done))
+        dx = np.repeat(ax[a[lo:hi]], n) - bx[b]
+        dy = np.repeat(ay[a[lo:hi]], n) - by[b]
+        cand = np.where(dx * dx + dy * dy <= r2, bval[b], _NO_NEIGHBOR)
+        res[lo:hi] = np.minimum.reduceat(cand, seg)
+        lo = hi
+    return res
+
+
+def _min_neighbor(
+    ax: np.ndarray, ay: np.ndarray,
+    bx: np.ndarray, by: np.ndarray, bval: np.ndarray, r: float,
+) -> np.ndarray:
+    """For each a item, the minimum `bval` over b items within r, or
+    _NO_NEIGHBOR — the NumPy twin of `_neighbor_pairs` + min-aggregation:
+    same cell key floor(x / r), same 3×3 neighbor cells, same float64
+    dx·dx + dy·dy <= r·r test, so the candidate set is the join's.
+
+    b items are sorted by (cell, bval); each (a item, occupied neighbor
+    cell) is one "row" naming a contiguous b range.  A row's minimum is
+    its FIRST b within r, so rows are scanned in doubling windows and
+    leave the scan at their first hit: inside a dense cell nearly every
+    row stops after one window, while a row without a hit still sees its
+    whole cell exactly once."""
+    out = np.full(len(ax), _NO_NEIGHBOR, dtype=np.int64)
+    if len(ax) == 0 or len(bx) == 0:
+        return out
+    bcx = np.floor(bx / r).astype(np.int64)
+    bcy = np.floor(by / r).astype(np.int64)
+    ux, uy = np.unique(bcx), np.unique(bcy)
+    bkey = np.searchsorted(ux, bcx) * len(uy) + np.searchsorted(uy, bcy)
+    order = np.lexsort((bval, bkey))
+    bx, by, bval = bx[order], by[order], bval[order]
+    keys, starts, counts = np.unique(bkey[order], return_index=True, return_counts=True)
+    lo_x, hi_x = np.minimum.reduceat(bx, starts), np.maximum.reduceat(bx, starts)
+    lo_y, hi_y = np.minimum.reduceat(by, starts), np.maximum.reduceat(by, starts)
+
+    r2 = r * r
+    acx = np.floor(ax / r).astype(np.int64)
+    acy = np.floor(ay / r).astype(np.int64)
+    row_a, row_cell = [], []
+    for dcx in (-1, 0, 1):
+        rx, hit_x = _rank(ux, acx + dcx)
+        for dcy in (-1, 0, 1):
+            ry, hit_y = _rank(uy, acy + dcy)
+            a = np.nonzero(hit_x & hit_y)[0]
+            cell, hit = _rank(keys, rx[a] * len(uy) + ry[a])
+            a, cell = a[hit], cell[hit]
+            # drop rows whose cell's bounding box is out of reach: rounding
+            # is monotone, so no b in the box can pass the d² test either
+            gx = np.maximum(np.maximum(lo_x[cell] - ax[a], ax[a] - hi_x[cell]), 0.0)
+            gy = np.maximum(np.maximum(lo_y[cell] - ay[a], ay[a] - hi_y[cell]), 0.0)
+            near = gx * gx + gy * gy <= r2
+            row_a.append(a[near])
+            row_cell.append(cell[near])
+    row_a = np.concatenate(row_a)
+    row_cell = np.concatenate(row_cell)
+    row_start, row_len = starts[row_cell], counts[row_cell]
+
+    best = np.full(len(row_a), _NO_NEIGHBOR, dtype=np.int64)
+    live = np.arange(len(row_a))
+    done, width = 0, 16
+    while len(live):
+        got = _row_minima(
+            ax, ay, bx, by, bval, r2, row_a[live], row_start[live] + done,
+            np.minimum(row_len[live] - done, width),
+        )
+        best[live] = got
+        done += width
+        width *= 2
+        live = live[(got == _NO_NEIGHBOR) & (row_len[live] > done)]
+    np.minimum.at(out, row_a, best)
+    return out
+
+
+def _cluster_level_np(
+    ids: np.ndarray, x: np.ndarray, y: np.ndarray, num: np.ndarray,
+    r: float, min_points: int,
+) -> tuple[np.ndarray, ...]:
+    """`radius_cluster_level` on NumPy arrays: (id, x, y, num_points,
+    is_cluster) of the clusters, then of the passthrough items."""
+    if len(ids) == 0:
+        return ids, x, y, num, np.zeros(0, dtype=bool)
+    # steps 2-3: origin = min-id neighbor (the self-pair is a candidate,
+    # so origin <= id); valid origins are their own origin
+    valid = _min_neighbor(x, y, x, y, ids, r) == ids
+    # step 4: min-id VALID neighbor, else the item's own id
+    cluster = _min_neighbor(x, y, x[valid], y[valid], ids[valid], r)
+    cluster = np.where(cluster == _NO_NEIGHBOR, ids, cluster)
+    # step 5: rollup per cluster id
+    order = np.argsort(cluster, kind="stable")
+    cid, first, n_members = np.unique(cluster[order], return_index=True, return_counts=True)
+    num_o = num[order]
+    total = np.add.reduceat(num_o, first)
+    wx = np.add.reduceat(x[order] * num_o, first)
+    wy = np.add.reduceat(y[order] * num_o, first)
+    keep = (n_members > 1) & (total >= min_points)
+    single = order[~np.repeat(keep, n_members)]
+    return (
+        np.concatenate([cid[keep], ids[single]]),
+        np.concatenate([wx[keep] / total[keep], x[single]]),
+        np.concatenate([wy[keep] / total[keep], y[single]]),
+        np.concatenate([total[keep], num[single]]),
+        np.concatenate([np.ones(int(keep.sum()), dtype=bool), num[single] > 1]),
+    )
+
+
+def _driver_tail(
+    spark, level: pa.Table, zooms: range, opts: ClusterOptions, level_zoom: int | None = None
+) -> DataFrame:
+    """The hierarchy levels at `zooms` clustered from one collected level
+    (plus that level itself at `level_zoom`, when given) as a single
+    DataFrame in the hierarchy's output schema."""
+    ids = level.column("id").to_numpy().astype(np.int64)
+    x = level.column("x").to_numpy().astype(np.float64)
+    y = level.column("y").to_numpy().astype(np.float64)
+    num = level.column("num_points").to_numpy().astype(np.int64)
+    parts = []
+
+    def emit(z, is_cluster):
+        parts.append(pa.table({
+            "zoom": pa.array(np.full(len(ids), z, dtype=np.int32)),
+            "id": ids, "x": x, "y": y, "num_points": num, "is_cluster": is_cluster,
+        }))
+
+    if level_zoom is not None:
+        emit(level_zoom, num > 1)
+    for z in zooms:
+        r = opts.radius / (opts.extent * float(2**z))
+        ids, x, y, num, is_cluster = _cluster_level_np(ids, x, y, num, r, opts.min_points)
+        emit(z, is_cluster)
+    return spark.createDataFrame(pa.concat_tables(parts), _SCHEMA)
+
+
 def radius_hierarchy(
     points_xy: DataFrame, opts: ClusterOptions = DEFAULT_OPTIONS
 ) -> DataFrame:
     """Full top-down hierarchy with the relational radius kernel: level z
-    consumes level z+1's output (driver loop, localCheckpoint per level to
-    keep lineage flat). Returns union with a zoom column (zoom of the
-    level the items appear at, leaf_zoom..min_zoom)."""
+    consumes level z+1's output. Returns union with a zoom column (zoom of
+    the level the items appear at, leaf_zoom..min_zoom), schema
+    (zoom int, id long, x double, y double, num_points long, is_cluster
+    boolean) when ids are long. With max_zoom < min_zoom the hierarchy is
+    the leaf level alone.
+
+    Before each kernel level one bounded `small_side` collect checks the
+    level's size: at most `_DRIVER_LEVEL_CAP` items and that level and
+    every remaining zoom come from the driver tail (`_driver_tail`, see
+    the module doc). Larger levels run distributed — driver loop,
+    localCheckpoint per level to keep lineage flat — and re-check after
+    each level they produce."""
+    spark = points_xy.sparkSession
     items = points_xy.select(
         "id", "x", "y", F.lit(1).cast("long").alias("num_points")
-    ).localCheckpoint()
+    )
+    zooms = range(opts.max_zoom, opts.min_zoom - 1, -1)
+    local = small_side(items, _DRIVER_LEVEL_CAP)
+    if local is not None:
+        return _driver_tail(spark, local, zooms, opts, level_zoom=opts.leaf_zoom)
+
+    items = items.localCheckpoint()
     levels = [
         items.select(
             F.lit(opts.leaf_zoom).alias("zoom"), "id", "x", "y", "num_points",
@@ -195,8 +385,8 @@ def radius_hierarchy(
     # The probe is a 1-row agg collect (gate-allowlisted: ≤ ceil(17/3)
     # single-row probes per hierarchy).
     d2min = None
-    probe_zs = list(range(opts.max_zoom, opts.min_zoom - 1, -3))
-    if probe_zs[-1] != opts.min_zoom:
+    probe_zs = list(zooms[::3])
+    if probe_zs and probe_zs[-1] != opts.min_zoom:
         # always probe the coarsest level: d²min=None must certify that
         # even the LARGEST radius pairs nothing
         probe_zs.append(opts.min_zoom)
@@ -220,14 +410,14 @@ def radius_hierarchy(
             break
     first_real = None
     if d2min is not None:
-        for z in range(opts.max_zoom, opts.min_zoom - 1, -1):
+        for z in zooms:
             r = opts.radius / (opts.extent * float(2**z))
             if r * r >= d2min:
                 first_real = z
                 break
 
     cur = items
-    for z in range(opts.max_zoom, opts.min_zoom - 1, -1):
+    for z in zooms:
         if first_real is None or z > first_real:
             # exact no-op level: passthrough (identical to what the
             # kernel emits when pairs has only self-pairs)
@@ -243,6 +433,11 @@ def radius_hierarchy(
             out.select(F.lit(z).alias("zoom"), "id", "x", "y", "num_points", "is_cluster")
         )
         cur = out.select("id", "x", "y", "num_points")
+        rest = range(z - 1, opts.min_zoom - 1, -1)
+        local = small_side(cur, _DRIVER_LEVEL_CAP) if rest else None
+        if local is not None:
+            levels.append(_driver_tail(spark, local, rest, opts))
+            break
     result = levels[0]
     for lv in levels[1:]:
         result = result.unionByName(lv)

@@ -28,7 +28,7 @@ PKG = REPO / "arrow_supercluster_spark"
 # Call attributes that can move an unbounded number of rows driver-side.
 # (.take/.first/.head/.limit carry an explicit literal row cap at the call
 # site, so they are structurally bounded and not gated.)
-_GATED = {"collect", "collectAsList", "toPandas", "toLocalIterator"}
+_GATED = {"collect", "collectAsList", "toPandas", "toArrow", "toLocalIterator"}
 
 # site ("relpath::function") -> stated bound.  Every entry was audited
 # bounded in the r5 judge sweep of all 45 call sites; the two r5 "What's
@@ -52,13 +52,16 @@ ALLOWLIST: dict[str, str] = {
         "d-dimensional mean/std stats: 1 row of 2d columns",
     "operators/centroids.py::seed_assign":
         "k seed centroids (k is a literal parameter)",
-    "operators/dedup.py::connected_components_adaptive":
-        "documented <=200k-edge union-find fast path; the distributed "
-        "path takes over above the literal edge cap",
+    "functions/small_side.py::small_side":
+        "limit(cap + 1): at most cap + 1 rows per call, one job (the "
+        "callers' literal caps: connected_components_adaptive's 200k "
+        "edges, the radius hierarchy's _DRIVER_LEVEL_CAP)",
     "operators/radius_cluster.py::radius_hierarchy":
-        "1-row min-pair-distance probe aggs: <= ceil(zoom_depth/3)+1 "
-        "single-row collects per hierarchy (the leading no-op-level "
-        "skip)",
+        "small_side gates of at most _DRIVER_LEVEL_CAP + 1 rows each "
+        "(one before the first kernel level, one after each distributed "
+        "level) plus, on the distributed path, 1-row min-pair-distance "
+        "probe aggs: <= ceil(zoom_depth/3)+1 single-row collects per "
+        "hierarchy (the leading no-op-level skip)",
     "operators/greedy.py::greedy_hierarchy":
         "1-row (count, max_id) agg fixing the cluster-id space",
     "operators/greedy.py::greedy_hierarchy_cc":
@@ -168,6 +171,9 @@ ALLOWLIST: dict[str, str] = {
     "plans/registry_ext212.py::q_information_gain":
         "three 1-row median aggs (type-1 split threshold per candidate "
         "feature)",
+    "sources/arrow_ipc.py::to_ipc_bytes":
+        "rendering-boundary API contract (the reference's tableToIPC): "
+        "rows bounded by the frame the caller asked to serialize",
     "sources/geoparquet.py::write_geoparquet":
         "per-partition file-path manifest (n_partitions rows) for "
         "metadata assembly",
