@@ -24,6 +24,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from arrow_supercluster_spark.config import DEFAULT_OPTIONS, ClusterOptions
 from arrow_supercluster_spark.operators import grid_cluster as gc
@@ -139,19 +140,21 @@ class ArrowClusterEngine:
         limit: Optional[int] = None, offset: int = 0,
     ) -> DataFrame:
         """Q3: member points of a node, paginated deterministically by id
-        (the reference's DFS skip/limit, arrow-cluster-engine.ts:312-348).
+        (the reference's DFS skip/limit, arrow-cluster-engine.ts:312-348):
+        the loaded points' columns (id, lng, lat, city), then rank.
 
         Scale shape (VERDICT r4 "What's wrong" #2): a zoom-0 cluster's
         leaf set is the whole corpus, so ranking it with a global
         `row_number` window funnels every member through one reducer.
         With a limit, the page is the rank-(offset, offset+limit] slice
-        of the id order — `orderBy("id").limit(offset+limit)` compiles to
-        TakeOrderedAndProject (distributed partial top-k), and the rank
-        is then recovered on that ≤ offset+limit-row page by a bounded
-        self-join count (rank of a prefix page = global rank). Without a
-        limit the full leaf set is requested, so the rank comes from the
-        distributed two-pass scan (functions/distrank.zip_scan) — no
-        single-partition stage either way."""
+        of the id order: `orderBy("id").limit(offset+limit)` compiles to
+        TakeOrderedAndProject (distributed partial top-k), and the
+        `row_number` window then runs over that page alone, so its frame
+        is at most offset+limit rows (rank within a prefix page = global
+        rank). One scan of the points, one job. Without a limit the full
+        leaf set is requested, so the rank comes from the distributed
+        two-pass scan (functions/distrank.zip_scan) — no single-partition
+        stage either way."""
         if self._points is None:
             raise RuntimeError("call load() first")
         pts = gc.with_cells(self._points, zoom, self.opts)
@@ -159,62 +162,49 @@ class ArrowClusterEngine:
             (F.col("cell_x") == cell_x) & (F.col("cell_y") == cell_y)
         ).drop("cell_x", "cell_y", "x", "y")
         if limit is not None:
-            hi = offset + limit
-            page_ids = leaves.select("id").orderBy("id").limit(hi)
-            ranks = (
-                page_ids.join(
-                    page_ids.select(F.col("id").alias("_id2")),
-                    F.col("_id2") <= F.col("id"),
-                )
-                .groupBy("id")
-                .agg(F.count(F.lit(1)).cast("int").alias("rank"))
-            )
-            # the page is ≤ offset+limit rows — broadcastable by design
-            ranks = F.broadcast(ranks.filter(F.col("rank") > offset))
-        else:
-            from arrow_supercluster_spark.functions.distrank import zip_scan
-
-            ranked0, _, _ = zip_scan(leaves.select("id"), ["id"], out="_r0")
-            ranks = ranked0.select(
-                "id", (F.col("_r0") + 1).cast("int").alias("rank")
+            page = leaves.orderBy("id").limit(offset + limit)
+            return page.withColumn(
+                "rank", F.row_number().over(Window.orderBy("id"))
             ).filter(F.col("rank") > offset)
+        from arrow_supercluster_spark.functions.distrank import zip_scan
+
+        ranked0, _, _ = zip_scan(leaves.select("id"), ["id"], out="_r0")
+        ranks = ranked0.select(
+            "id", (F.col("_r0") + 1).cast("int").alias("rank")
+        ).filter(F.col("rank") > offset)
         return leaves.join(ranks, "id")
 
     def get_cluster_expansion_zoom(self, zoom: int, cell_x: int, cell_y: int) -> int:
         """Q4 (arrow-cluster-engine.ts:240-256): first zoom > `zoom` where
-        the node splits into >1 child. Single-pass union form (one job, one
-        collect): the follow-the-single-child walk is equivalent to "first
-        zoom whose descendant-cell count under the anchor exceeds 1" —
-        while the chain is single, the descendant count IS 1. Descendancy
-        is a shiftright of the (non-negative) cell coords, so each branch
-        is a partition-pruned filter + count; no per-level driver trips.
-        The count sequence is monotone over zoom for a nonempty anchor, so
-        "first ≠ 1" (which also catches a nonexistent anchor cell: all
-        counts 0 → returns zoom+1, like the walk) matches the reference."""
-        nodes = self._require()
-        parts = []
-        for z in range(zoom + 1, self.opts.max_zoom + 2):
-            shift = z - zoom
-            parts.append(
-                nodes.filter(F.col("zoom") == z)
-                .filter(
-                    (F.shiftright(F.col("cell_x"), shift) == cell_x)
-                    & (F.shiftright(F.col("cell_y"), shift) == cell_y)
-                )
-                .agg(
-                    F.lit(z).alias("z"),
-                    F.count(F.lit(1)).alias("n_children"),
-                )
-            )
-        splits = parts[0]
-        for p in parts[1:]:
-            splits = splits.unionByName(p)
-        row = (
-            splits.filter(F.col("n_children") != 1)
-            .agg(F.min("z").alias("ez"))
-            .collect()[0]
+        the node splits into other than one child, else max_zoom + 1.
+
+        The follow-the-single-child walk is equivalent to "first zoom whose
+        descendant-cell count under the anchor is not 1": while the chain
+        is single, the descendant count IS 1. Descendancy is a shiftright
+        of the (non-negative) cell coords by `zoom - z0`, taken from the
+        zoom column, so one partition-pruned scan of the zooms below the
+        anchor and one groupBy("zoom") count give every level's count; the
+        walk itself runs on the ≤ max_zoom + 1 collected rows. A
+        nonexistent anchor cell has count 0 at z0 + 1 and returns z0 + 1,
+        and an anchor at the leaf zoom has no level below it and returns
+        max_zoom + 1, both like the walk."""
+        z0, top = int(zoom), self.opts.max_zoom + 1
+        below = self._require().filter((F.col("zoom") > z0) & (F.col("zoom") <= top))
+        shift = F.col("zoom") - z0  # F.shiftright takes only a literal shift
+
+        def up(c):
+            return F.call_function("shiftright", F.col(c), shift)
+
+        counts = dict(
+            below.filter((up("cell_x") == cell_x) & (up("cell_y") == cell_y))
+            .groupBy("zoom")
+            .count()
+            .collect()
         )
-        return int(row["ez"]) if row["ez"] is not None else self.opts.max_zoom + 1
+        for z in range(z0 + 1, top + 1):
+            if counts.get(z, 0) != 1:
+                return z
+        return top
 
     def get_descendants(self, zoom: int, cell_x: int, cell_y: int, max_depth_zoom: int) -> DataFrame:
         """J2: all nodes under (zoom,cell) down to max_depth_zoom —

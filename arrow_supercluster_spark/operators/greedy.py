@@ -65,7 +65,6 @@ neighborhood; O(n) per level instead of O(n²).
 
 from __future__ import annotations
 
-import math
 from typing import Iterator
 
 import numpy as np
@@ -77,17 +76,6 @@ RESULT_SCHEMA = (
     "zoom int, cluster_id long, x double, y double, "
     "parent_id long, num_points long, pos long"
 )
-
-
-def _lng_x(lng: np.ndarray) -> np.ndarray:
-    return np.float32(lng / 360.0 + 0.5).astype(np.float64)
-
-
-def _lat_y(lat: np.ndarray) -> np.ndarray:
-    s = np.sin(lat * math.pi / 180.0)
-    y = 0.5 - 0.25 * np.log((1.0 + s) / (1.0 - s)) / math.pi
-    y = np.clip(y, 0.0, 1.0)
-    return np.float32(y).astype(np.float64)
 
 
 def _neighbors_within(

@@ -48,15 +48,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-def anchor_origin_zoom(nodes: DataFrame, cluster_id: int) -> DataFrame:
-    """(1-row) origin zoom of a packed cluster id: the level its children
-    live at = deepest row of that id + 1 (_getOriginZoom's decode,
-    arrow-cluster-engine.ts:304-306, derived relationally)."""
-    return (
-        nodes.filter(F.col("cluster_id") == cluster_id)
-        .agg((F.max("zoom") + 1).alias("origin_zoom"))
-    )
-
 
 def greedy_children(nodes: DataFrame, cluster_id: int) -> DataFrame:
     """getChildren(clusterId) (arrow-cluster-engine.ts:198-226): rows whose

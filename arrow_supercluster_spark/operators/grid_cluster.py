@@ -100,26 +100,6 @@ def cluster_grid(
     return cell_agg(with_cells(pts, zoom, opts), zoom)
 
 
-def rollup_level(child: DataFrame, zoom: int) -> DataFrame:
-    """Nodes at `zoom` from nodes at `zoom+1`: parent cell = child cell >> 1
-    (exact — see module docstring); sums/counts/mins aggregate exactly."""
-    return (
-        child.groupBy(
-            F.floor(F.col("cell_x") / 2).alias("cell_x"),
-            F.floor(F.col("cell_y") / 2).alias("cell_y"),
-        )
-        .agg(
-            F.sum("num_points").alias("num_points"),
-            F.sum("sum_x").alias("sum_x"),
-            F.sum("sum_y").alias("sum_y"),
-            F.min("min_id").alias("min_id"),
-            F.min("min_lng").alias("min_lng"),
-            F.min("min_lat").alias("min_lat"),
-        )
-        .select(F.lit(zoom).alias("zoom"), *[c for c in NODE_COLS if c != "zoom"])
-    )
-
-
 def cluster_hierarchy(
     points: DataFrame, opts: ClusterOptions = DEFAULT_OPTIONS, prepared: bool = False,
 ) -> DataFrame:

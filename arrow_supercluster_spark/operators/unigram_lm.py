@@ -69,26 +69,6 @@ def seed_words(
     return word_table(docs, text).orderBy(F.desc("c"), F.asc("w")).limit(cap)
 
 
-def seed_vocab_expr(words: DataFrame, max_len: int = _MAX_PIECE) -> DataFrame:
-    """Substring explosion via a SQL comprehension (substr with a
-    sequence of (start, len) pairs)."""
-    w = words.selectExpr(
-        "c",
-        f"""
-        flatten(transform(sequence(1, {max_len}), ln ->
-          filter(transform(sequence(1, length(w)), i ->
-            case when i + ln - 1 <= length(w)
-                 then substr(w, i, ln) end), x -> x is not null)))
-        AS pieces
-        """,
-    )
-    return (
-        w.select("c", F.explode("pieces").alias("piece"))
-        .groupBy("piece")
-        .agg(F.sum("c").alias("freq"))
-    )
-
-
 def _lattice_marginals(word: str, probs: dict, max_len: int):
     """Forward/backward expected piece counts + the word's log-likelihood
     under the unigram model. Standard lattice sum-product in log space

@@ -37,8 +37,7 @@ ALLOWLIST: dict[str, str] = {
     "engine.py::indexed_point_count":
         "1-row global count agg",
     "engine.py::get_cluster_expansion_zoom":
-        "per-cluster readout: <= 1 row per requested cluster id, plus a "
-        "1-row hierarchy-depth agg",
+        "<= max_zoom + 1 rows, one count per zoom below the anchor",
     "engine.py::get_clusters":
         "user-facing engine API contract (reference getClusters returns "
         "an array): rows bounded by the viewport/zoom result the caller "

@@ -40,14 +40,19 @@ def _hotspots(n, seed):
     return rng.permutation(n).astype(np.int64), xy[:, 0], xy[:, 1]
 
 
-def _straddling(opts):
+def _straddling(opts, adjacent=False):
     """A=(0.9r, 0) and B=(2.4r, 0) sit two cells apart at the max_zoom
-    radius r (d = 1.5r, no candidate pair at r); a far diagonal pair at
-    2.7r is outside r too.  A and B must merge at the 2r level."""
+    radius r (d = 1.5r, no candidate pair at r); a far diagonal pair is
+    outside r too: 2.7r apart and two cells apart, or with `adjacent`
+    2.76r apart in diagonally adjacent cells, so the 3×3 neighbour join
+    offers it as a candidate that only the d² test rejects.  A and B must
+    merge at the 2r level."""
     r = opts.radius / (opts.extent * 2.0**opts.max_zoom)
-    h = 2.7 * r / math.sqrt(2.0)
-    x = [0.9 * r, 2.4 * r, 0.5, 0.5 + h]
-    y = [0.0, 0.0, 0.5, 0.5 + h]
+    d, c = (2.76, (math.floor(0.5 / r) + 0.02) * r) if adjacent else (2.7, 0.5)
+    h = d * r / math.sqrt(2.0)
+    assert math.floor((c + h) / r) - math.floor(c / r) == (1 if adjacent else 2)
+    x = [0.9 * r, 2.4 * r, c, c + h]
+    y = [0.0, 0.0, c, c + h]
     return [10, 11, 20, 21], x, y
 
 
@@ -84,7 +89,7 @@ def _both_paths(monkeypatch, pts, opts, mixed_cap=None):
 STRADDLE_OPTS = ClusterOptions(max_zoom=8)
 
 
-@pytest.mark.parametrize("fixture", ["lcg300", "hotspots", "straddling"])
+@pytest.mark.parametrize("fixture", ["lcg300", "hotspots", "straddling", "straddling_adjacent"])
 def test_tail_matches_distributed(spark, monkeypatch, fixture):
     if fixture == "lcg300":
         x, y, ids = project(lcg_points(300))
@@ -93,12 +98,12 @@ def test_tail_matches_distributed(spark, monkeypatch, fixture):
         ids, x, y = _hotspots(400, seed=7)
         opts = ClusterOptions(max_zoom=8)
     else:
-        ids, x, y = _straddling(STRADDLE_OPTS)
+        ids, x, y = _straddling(STRADDLE_OPTS, adjacent=fixture == "straddling_adjacent")
         opts = STRADDLE_OPTS
     out = _both_paths(monkeypatch, _frame(spark, ids, x, y), opts, mixed_cap=len(ids) // 2)
     assert set(out.zoom) == set(range(opts.min_zoom, opts.leaf_zoom + 1))
     assert (out.groupby("zoom").num_points.sum() == len(ids)).all()
-    if fixture == "straddling":
+    if fixture.startswith("straddling"):
         assert {10, 11} <= set(out[out.zoom == opts.max_zoom].id)
         lvl = out[out.zoom == opts.max_zoom - 1]
         assert lvl[lvl.id == 10][["num_points", "is_cluster"]].values.tolist() == [[2, True]]
