@@ -23,7 +23,9 @@ queries):
   * rounding: `half_up` reproduces Spark's F.round (BigDecimal HALF_UP
     on a positive double) as floor(x) + (x − floor(x) >= 0.5), which is
     exact for x < 2^52 — NOT floor(x + 0.5), whose addition can cross an
-    integer boundary one ulp early.
+    integer boundary one ulp early.  `round_half_up` is F.round at a
+    positive scale, where the decimal Spark rounds is no longer the
+    exact double (see its docstring).
 
 Replication cost: each item is shipped to its B block pairs once →
 B × |items| rows through one exchange, tiny at the eval grain these
@@ -33,16 +35,48 @@ are the LSH/IVF paths — see each query's docstring).
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Context, Decimal
+
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 BLOCKS = 16
+# Enough digits to quantize any finite double at any practical scale.
+_WIDE = Context(prec=1000)
 
 
 def half_up(x: np.ndarray) -> np.ndarray:
     """Spark F.round / BigDecimal HALF_UP for positive doubles < 2^52."""
     fl = np.floor(x)
     return (fl + (x - fl >= 0.5)).astype(np.int64)
+
+
+def round_half_up(x: np.ndarray, digits: int) -> np.ndarray:
+    """Spark F.round(double, digits) for digits >= 0, elementwise.
+
+    Spark computes BigDecimal.valueOf(x).setScale(digits, HALF_UP)
+    .toDouble: it rounds the decimal Double.toString prints (Python's
+    repr), not the exact binary value, so 1.5e-09 rounds up to 2e-09 at
+    9 digits although the stored double is just below 1.5e-09.  A scaled
+    floor decides every value whose scaled fraction is clear of one half
+    by more than the scaling's rounding error (< 2 ulp); the values
+    inside that band, and those too large to scale exactly, go through
+    Decimal(repr(x)) as Spark does.  NaN and ±inf pass through; a zero
+    result is +0.0, as BigDecimal has no negative zero."""
+    x = np.asarray(x, dtype=np.float64)
+    scale = 10.0**digits
+    with np.errstate(over="ignore", invalid="ignore"):
+        y = np.abs(x) * scale
+        fl = np.floor(y)
+        frac = y - fl
+        k = fl + (frac >= 0.5)
+        out = np.where(x < 0, -k, k) / scale + 0.0
+        exact = np.isfinite(x) & ((y >= 2.0**53) | (np.abs(frac - 0.5) <= 4 * np.spacing(y)))
+    q = Decimal(1).scaleb(-digits)
+    for i in np.flatnonzero(exact):
+        d = Decimal(repr(float(x[i])))
+        out[i] = float(d.quantize(q, ROUND_HALF_UP, _WIDE)) + 0.0
+    return out
 
 
 def fold_d2(A: np.ndarray, B: np.ndarray) -> np.ndarray:

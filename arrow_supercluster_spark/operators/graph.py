@@ -1,23 +1,60 @@
-"""Graph operators beyond connected components (dedup.py): PageRank.
+"""Graph operators beyond connected components (dedup.py): PageRank,
+the user co-occurrence edge set, triangles, label propagation.
 
 Public algorithm (Brin & Page 1998), expressed relationally: rank
 iteration = one join + one aggregate per round, driver-controlled like
 the zoom recursion (SURVEY §3.1) and the components loop (dedup.py).
 
 Scale shape (100 TB of edges):
-- edges shuffle ONCE per iteration keyed by destination; ranks are
-  |nodes| rows (small side → broadcastable when nodes ≪ edges);
-- per-iteration results are localCheckpointed so the lineage stays
-  O(1) instead of O(iterations) — the same discipline as the zoom loop;
-- ranks round to 9 decimals each iteration: double summation order is
-  partition-dependent, and without re-rounding the drift compounds
-  across iterations (the cross-engine parity rationale of
-  plans/registry.py's float discipline).
+- the edge list is materialized once, then gated by one bounded
+  `small_side` fetch: at most `_DRIVER_EDGE_CAP` edges run every round
+  on the driver in NumPy (two `bincount`s per round) and come back as
+  one createDataFrame — the radius hierarchy's tail, for the same
+  reason: at that size a round costs its Spark jobs, not its data;
+- above the cap, edges shuffle ONCE per iteration keyed by destination;
+  ranks are |nodes| rows (small side → broadcastable when nodes ≪
+  edges), and per-iteration results are localCheckpointed so the
+  lineage stays O(1) instead of O(iterations) — the same discipline as
+  the zoom loop;
+- ranks round to 9 decimals each iteration on both paths: double
+  summation order is partition-dependent, and without re-rounding the
+  drift compounds across iterations (the cross-engine parity rationale
+  of plans/registry.py's float discipline).  The tail rounds with
+  `blockpairs.round_half_up`, which reproduces Spark's F.round.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
+
+from arrow_supercluster_spark.functions.blockpairs import round_half_up
+from arrow_supercluster_spark.functions.checkpoint import truncate
+from arrow_supercluster_spark.functions.small_side import small_side
+
+# Largest edge list whose iterations run on the driver. The sf0.1 user
+# co-occurrence graph (1.58M edges) fits: q_pagerank there took 5.7 s on
+# the tail against 6.8 s distributed (one run each, 4 local cores).
+_DRIVER_EDGE_CAP = 2_000_000
+
+
+def cooccurrence_edges(events: DataFrame) -> DataFrame:
+    """Directed user co-occurrence edges (src, dst), distinct: two users
+    are linked when each has an event of the same type in the same hour
+    (src != dst, so both directions of every link are present).
+    `events` needs user_id, event_type and ts."""
+    ev = events.select("user_id", "event_type", F.date_trunc("hour", "ts").alias("h"))
+    a = ev.select(F.col("user_id").alias("src"), "event_type", "h")
+    b = ev.select(F.col("user_id").alias("dst"), "event_type", "h")
+    return (
+        a.join(b, ["event_type", "h"])
+        .filter(F.col("src") != F.col("dst"))
+        .select("src", "dst")
+        .distinct()
+    )
 
 
 def pagerank(
@@ -26,21 +63,75 @@ def pagerank(
     dst: str = "dst",
     iterations: int = 3,
     damping: float = 0.85,
+    restart=None,
 ) -> DataFrame:
     """PageRank over a directed edge list, fixed iteration count.
     Simplified dangling treatment (their mass is dropped, the common
-    relational variant); uniform init 1/N. Returns (node, rank).
+    relational variant). Returns (node, rank), rank rounded to 6.
 
-    r10: the edge list, node set and degree table are materialized ONCE
-    (eager truncate) — callers pass expensive lineages (the
-    co-occurrence self-join), and the iteration loop re-ran that
-    lineage per round per consumer (edges ×3 rounds, nodes ×5 uses:
-    12.5 s → ~4 s for q_pagerank at sf0.1).  Materializing the edge
-    table before iterating is also the 100 TB-correct shape: each round
-    then reads a stored table instead of re-shuffling the derivation."""
-    from arrow_supercluster_spark.functions.checkpoint import truncate
+    Restart: uniform by default — start 1/N and jump (1 − d)/N. With
+    `restart`, a predicate on the node key written with operators a
+    Spark Column and a NumPy array share (e.g. `lambda v: v % 17 == 0`),
+    the walk restarts into that seed set only (personalized PageRank):
+    seeds start at 1/|seeds| and jump (1 − d)·(1/|seeds|), the rest start
+    and jump at 0. Each form keeps the arithmetic of its SQL twin.
 
+    r10: the edge list is materialized ONCE (eager truncate) — callers
+    pass expensive lineages (the co-occurrence self-join), and the
+    iteration loop re-ran that lineage per round per consumer. The
+    driver-tail gate then reads the stored table, so an input above the
+    cap pays one bounded `limit` job, not a second derivation."""
     edges = truncate(edges.select(F.col(src).alias(src), F.col(dst).alias(dst)))
+    local = small_side(edges, _DRIVER_EDGE_CAP)
+    if local is not None:
+        node, rank = _pagerank_np(local, iterations, damping, restart)
+        schema = StructType([
+            StructField("node", edges.schema[src].dataType),
+            StructField("rank", DoubleType()),
+        ])
+        ranks = edges.sparkSession.createDataFrame(
+            pa.table({"node": node, "rank": rank}), schema
+        )
+        return ranks.select("node", F.round("rank", 6).alias("rank"))
+    return _pagerank_distributed(edges, src, dst, iterations, damping, restart)
+
+
+def _pagerank_np(
+    edges: pa.Table, iterations: int, damping: float, restart=None
+) -> tuple[pa.Array, np.ndarray]:
+    """Every round of `pagerank` on a collected (src, dst) edge table:
+    (node keys in their Arrow type, 9-decimal ranks before the final
+    round to 6). Same sums as the distributed round — the inflow of a
+    node is Σ rank[src] / deg[src] over its in-edges, then
+    round(jump + d · inflow, 9) — with the summation order of the edge
+    table instead of the shuffle's."""
+    s, d = edges.column(0), edges.column(1)
+    node = pc.unique(pa.chunked_array(s.chunks + d.chunks, type=s.type))
+    si = pc.index_in(s, value_set=node).to_numpy()
+    di = pc.index_in(d, value_set=node).to_numpy()
+    n = len(node)
+    if n == 0:
+        return node, np.zeros(0)
+    deg = np.bincount(si, minlength=n).astype(np.float64)
+    if restart is None:
+        tele = np.full(n, 1.0 / n)
+        jump = (1.0 - damping) / n
+    else:
+        seed = np.asarray(restart(node.to_numpy(zero_copy_only=False)), dtype=bool)
+        ns = float(seed.sum())
+        tele = np.where(seed, 1.0 / ns if ns else 0.0, 0.0)
+        jump = (1.0 - damping) * tele
+    rank = round_half_up(tele, 9)
+    for _ in range(iterations):
+        inflow = np.bincount(di, weights=rank[si] / deg[si], minlength=n)
+        rank = round_half_up(jump + damping * inflow, 9)
+    return node, rank
+
+
+def _pagerank_distributed(
+    edges: DataFrame, src: str, dst: str, iterations: int, damping: float, restart=None
+) -> DataFrame:
+    """The relational rounds of `pagerank` over a materialized edge list."""
     nodes = truncate(
         edges.select(F.col(src).alias("node"))
         .union(edges.select(F.col(dst).alias("node")))
@@ -51,9 +142,16 @@ def pagerank(
         # empty graph (e.g. a co-occurrence window that matched nothing)
         # → empty rank table, not a ZeroDivisionError at plan build
         return nodes.select("node", F.lit(0.0).alias("rank")).limit(0)
+    if restart is None:
+        tele = F.lit(1.0 / n)
+        jump = F.lit((1.0 - damping) / n)
+    else:
+        is_seed = restart(F.col("node"))
+        ns = float(nodes.filter(is_seed).count())
+        tele = F.when(is_seed, F.lit(1.0 / ns if ns else 0.0)).otherwise(F.lit(0.0))
+        jump = (1.0 - damping) * tele
     deg = truncate(edges.groupBy(src).agg(F.count(F.lit(1)).alias("deg")))
-    ranks = nodes.select("node", F.round(F.lit(1.0 / n), 9).alias("rank"))
-    base = (1.0 - damping) / n
+    ranks = nodes.select("node", F.round(tele, 9).alias("rank"))
     for _ in range(iterations):
         contribs = (
             edges.join(deg, src)
@@ -66,9 +164,7 @@ def pagerank(
             nodes.join(contribs, "node", "left")
             .select(
                 "node",
-                F.round(
-                    base + damping * F.coalesce(F.col("inflow"), F.lit(0.0)), 9
-                ).alias("rank"),
+                F.round(jump + damping * F.coalesce(F.col("inflow"), F.lit(0.0)), 9).alias("rank"),
             )
             .localCheckpoint(eager=False)
         )
@@ -134,8 +230,6 @@ def _triangle_counts_bitset(und: DataFrame, ids: list) -> DataFrame:
     """Dense/bounded-domain fast path: broadcast adjacency bitmaps,
     one AND+popcount per edge.  ids = the full sorted node domain
     (<= _TRI_BITSET_MAX_NODES by dispatch)."""
-    import numpy as np
-
     spark = und.sparkSession
     n = len(ids)
     if n == 0:
@@ -210,8 +304,6 @@ def _triangle_counts_bitset(und: DataFrame, ids: list) -> DataFrame:
 
 def _triangle_counts_oriented(und: DataFrame) -> DataFrame:
     """Any-scale relational path: degree-oriented wedge enumeration."""
-    from arrow_supercluster_spark.functions.checkpoint import truncate
-
     deg = (
         und.select(F.col("u").alias("n"))
         .unionAll(und.select(F.col("v").alias("n")))
@@ -275,8 +367,6 @@ def label_propagation(
     localCheckpoint per round keeps lineage O(1).
     """
     from pyspark.sql import Window
-
-    from arrow_supercluster_spark.functions.checkpoint import truncate
 
     # r10: materialize the caller's edge lineage once — each of the 3
     # rounds re-joined `e`, whose unmaterialized lineage (typically the

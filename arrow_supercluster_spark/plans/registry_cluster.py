@@ -4,7 +4,7 @@ percentiles (X1). See registry.py for the parity discipline."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from pyspark.sql import Window, functions as F
 
 from arrow_supercluster_spark.config import DEFAULT_OPTIONS as OPTS
 from arrow_supercluster_spark.functions import projection as proj
@@ -243,9 +243,9 @@ def q_get_leaves(spark, sf_dir):
     limit=10) is scale-safe (VERDICT r4 "What's wrong" #2): the page is
     the rank-(2,12] slice of the id order, so `orderBy("id").limit(12)`
     (TakeOrderedAndProject — distributed partial top-k, never a global
-    single-reducer window) fetches it, and ranks are recovered on the
-    ≤12-row page by a bounded self-join count — the rank of a row within
-    a prefix page equals its global rank."""
+    single-reducer window) fetches it, and `row_number()` ranks the
+    ≤12-row page alone — the rank of a row within a prefix page equals
+    its global rank (the engine's get_leaves page, one job)."""
     # zoom 4: the anchor cell holds ~10 points, so the offset/limit page
     # is non-empty (at zoom 6 the cell is a singleton -> trivial empty page)
     anchor = _anchor_cell(spark, sf_dir, 4)
@@ -255,15 +255,9 @@ def q_get_leaves(spark, sf_dir):
         (F.col("cell_x") == F.col("ax")) & (F.col("cell_y") == F.col("ay")),
     )
     page = leaves.select("id", "lng", "lat").orderBy("id").limit(12)
-    ranks = (
-        page.select("id")
-        .join(page.select(F.col("id").alias("_id2")), F.col("_id2") <= F.col("id"))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).cast("int").alias("rank"))
-        .filter(F.col("rank") >= 3)
-    )
     return (
-        page.join(F.broadcast(ranks), "id")
+        page.withColumn("rank", F.row_number().over(Window.orderBy("id")))
+        .filter(F.col("rank") >= 3)
         .select("rank", "id", "lng", "lat")
     )
 

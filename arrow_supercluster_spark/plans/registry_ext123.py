@@ -98,6 +98,55 @@ def lof_from_knn(knn):
     )
 
 
+def _lof_topk(d2i, src, dst):
+    """(src, dst, d2i) of each row's first _LOF_K columns of the
+    block matrix `d2i` in (d2i, dst) order, self-pairs (src == dst)
+    excluded: one lexsort over the whole matrix, self-pairs keyed last
+    so they fall past the cut unless the row has fewer than _LOF_K
+    other candidates, then dropped."""
+    import numpy as np
+
+    self_ = src[:, None] == dst[None, :]
+    order = np.lexsort(
+        (np.broadcast_to(dst, d2i.shape), d2i, self_), axis=1
+    )[:, :_LOF_K]
+    keep = ~np.take_along_axis(self_, order, axis=1)
+    return (
+        np.broadcast_to(src[:, None], order.shape)[keep],
+        dst[order][keep],
+        np.take_along_axis(d2i, order, axis=1)[keep],
+    )
+
+
+def _lof_knn_fn(pdf):
+    """q_lof_outliers' block-pair kernel (blockpairs protocol): for
+    every src in the group, its local top-_LOF_K by (d2i, dst) among
+    the group's pairs — the a-side rows against the b-side, and for a
+    cross-block group the b-side rows against the a-side too."""
+    import numpy as np
+    import pandas as pd
+
+    from arrow_supercluster_spark.functions import blockpairs as bp
+
+    pa, pb = int(pdf["pa"].iat[0]), int(pdf["pb"].iat[0])
+    a = pdf[pdf["p"] == pa]
+    b = pdf[pdf["p"] == pb]
+    cols = ("src", "dst", "d2i")
+    if a.empty or b.empty:
+        return pd.DataFrame({c: np.zeros(0, dtype=np.int64) for c in cols})
+    A = np.stack(a["v"].to_numpy())
+    B = np.stack(b["v"].to_numpy())
+    d2i = bp.half_up(bp.fold_d2(A, B) * 1e6)
+    ia = a["vec_id"].to_numpy(dtype=np.int64)
+    ib = b["vec_id"].to_numpy(dtype=np.int64)
+    parts = [_lof_topk(d2i, ia, ib)]
+    if pa != pb:
+        parts.append(_lof_topk(d2i.T, ib, ia))
+    return pd.DataFrame(
+        {c: np.concatenate([p[i] for p in parts]) for i, c in enumerate(cols)}
+    )
+
+
 @register(
     "q_lof_outliers",
     f"""
@@ -173,45 +222,10 @@ def q_lof_outliers(spark, sf_dir):
     # top-k member because each directed (src, dst) pair lives in
     # exactly one group (knn exceptAll vs the pair-join form = 0 at
     # sf0.1).
-    import numpy as np
-    import pandas as pd
-
     from arrow_supercluster_spark.functions import blockpairs as bp
 
-    def _knn_fn(pdf):
-        pa, pb = int(pdf["pa"].iat[0]), int(pdf["pb"].iat[0])
-        a = pdf[pdf["p"] == pa]
-        b_ = pdf[pdf["p"] == pb]
-        cols = ["src", "dst", "d2i"]
-        if a.empty or b_.empty:
-            return pd.DataFrame({c: [] for c in cols})
-        A = np.stack(a["v"].to_numpy())
-        B = np.stack(b_["v"].to_numpy())
-        d2i = bp.half_up(bp.fold_d2(A, B) * 1e6)
-        ia, ib = a["vec_id"].to_numpy(), b_["vec_id"].to_numpy()
-        out = []
-        for r in range(len(ia)):
-            m = ib != ia[r]
-            order = np.lexsort((ib[m], d2i[r][m]))[:_LOF_K]
-            out.append(
-                pd.DataFrame(
-                    {"src": ia[r], "dst": ib[m][order],
-                     "d2i": d2i[r][m][order]}
-                )
-            )
-        if pa != pb:
-            for c in range(len(ib)):
-                order = np.lexsort((ia, d2i[:, c]))[:_LOF_K]
-                out.append(
-                    pd.DataFrame(
-                        {"src": ib[c], "dst": ia[order],
-                         "d2i": d2i[:, c][order]}
-                    )
-                )
-        return pd.concat(out, ignore_index=True)
-
     cand = bp.block_pair_groups(
-        emb, _knn_fn, "src long, dst long, d2i long"
+        emb, _lof_knn_fn, "src long, dst long, d2i long"
     )
     w = Window.partitionBy("src").orderBy("d2i", "dst")
     knn = (

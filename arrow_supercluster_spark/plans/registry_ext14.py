@@ -138,23 +138,16 @@ _PR_SQL = (
 def q_pagerank(spark, sf_dir):
     """Graph family (with connected components, dedup.py) — PageRank
     over the user co-occurrence graph (same event type in the same
-    hour), 3 iterations, damping 0.85. Spark runs the relational
-    iteration driver-side with per-round localCheckpoint (lineage
-    O(1), like the zoom loop); the oracle unrolls the same three
-    rounds as chained CTEs — differentially checking the whole
-    iteration algebra. Ranks re-round to 9 each round so summation
-    order can't compound drift across engines."""
-    ev = read_events(spark, sf_dir).select(
-        "user_id", "event_type", F.date_trunc("hour", "ts").alias("h")
-    )
-    a = ev.select(F.col("user_id").alias("src"), "event_type", "h")
-    b = ev.select(F.col("user_id").alias("dst"), "event_type", "h")
-    edges = (
-        a.join(b, ["event_type", "h"])
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
+    hour), 3 iterations, damping 0.85. The edge list is materialized
+    once and gated: up to graph._DRIVER_EDGE_CAP edges (the sf0.1 graph
+    included) every round runs on the driver in NumPy and the ranks
+    come back as one createDataFrame; above it the relational rounds
+    run with per-round localCheckpoint (lineage O(1), like the zoom
+    loop). The oracle unrolls the same three rounds as chained CTEs —
+    differentially checking the whole iteration algebra. Ranks
+    re-round to 9 each round so summation order can't compound drift
+    across engines."""
+    edges = graph.cooccurrence_edges(read_events(spark, sf_dir))
     return graph.pagerank(edges, iterations=3, damping=0.85)
 
 

@@ -3,8 +3,8 @@
 
 - q_personalized_pagerank: PageRank with RESTART into a deterministic
   seed set (user_id mod 17 = 0) — the recommendation/trust primitive
-  ("rank everything from THESE nodes' point of view"). Same relational
-  iteration as q_pagerank (driver loop + localCheckpoint), oracle =
+  ("rank everything from THESE nodes' point of view"). Same
+  graph.pagerank as q_pagerank with a restart predicate, oracle =
   the identical 3 rounds unrolled as generated CTEs, ranks re-rounded
   to 9 each round so summation order cannot compound.
 - q_knn_reciprocity: edge reciprocity of the DIRECTED exact 5-NN
@@ -18,8 +18,9 @@
   same join at 100 TB stays bounded by k², which is WHY kNN graphs
   are the scalable social-reach substrate.
 
-At 100 TB: PPR is k bounded edge-joins; reciprocity is one self-join
-on reversed keys; two-hop is one bounded two-step join. The kNN edge
+At 100 TB: PPR is k bounded edge-joins (below the driver-tail cap, one
+bounded edge fetch); reciprocity is one self-join on reversed keys;
+two-hop is one bounded two-step join. The kNN edge
 builds are the documented eval-only exact kernels — the production
 graph constructor is knn_edges_lsh.
 """
@@ -28,6 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from arrow_supercluster_spark.operators import graph
 from arrow_supercluster_spark.plans.registry_core import register
 from arrow_supercluster_spark.plans.registry_ext import _emb
 from arrow_supercluster_spark.plans.registry_ext158 import mutual_knn_edges
@@ -126,63 +128,18 @@ def q_personalized_pagerank(spark, sf_dir):
     behind people-you-may-know and trust propagation. {it} iterations
     at d = {d}, ranks re-rounded to 9 per round (the q_pagerank drift
     discipline), dangling mass dropped (same stated variant). Oracle:
-    the identical rounds unrolled as generated CTEs.""".format(
+    the identical rounds unrolled as generated CTEs. Runs on
+    graph.pagerank with the seed set as its restart predicate, so it
+    shares q_pagerank's driver tail below graph._DRIVER_EDGE_CAP edges
+    and its relational rounds above.""".format(
         m=_PPR_SEED_MOD, it=_PPR_ITERS, d=_PPR_D
     )
-    ev = read_events(spark, sf_dir).select(
-        "user_id", "event_type", F.date_trunc("hour", "ts").alias("h")
+    edges = graph.cooccurrence_edges(read_events(spark, sf_dir))
+    ranks = graph.pagerank(
+        edges, iterations=_PPR_ITERS, damping=_PPR_D,
+        restart=lambda node: node % _PPR_SEED_MOD == 0,
     )
-    a = ev.select(F.col("user_id").alias("src"), "event_type", "h")
-    b = ev.select(F.col("user_id").alias("dst"), "event_type", "h")
-    from arrow_supercluster_spark.functions.checkpoint import truncate
-
-    # r10: the q_pagerank treatment — edges/nodes/deg materialized once
-    # (the loop re-ran the nodes distinct and the degree agg per round;
-    # truncate also replaces the session persist()).
-    edges = truncate(
-        a.join(b, ["event_type", "h"])
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
-    nodes = truncate(
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    ns = float(
-        nodes.filter(F.col("node") % _PPR_SEED_MOD == 0).count()
-    )
-    is_seed = F.col("node") % _PPR_SEED_MOD == 0
-    teleport = F.when(is_seed, F.lit(1.0) / ns).otherwise(F.lit(0.0))
-    deg = truncate(edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")))
-    ranks = nodes.select("node", F.round(teleport, 9).alias("rank"))
-    for _ in range(_PPR_ITERS):
-        contribs = (
-            edges.join(deg, "src")
-            .join(ranks, F.col("src") == F.col("node"))
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("rank") / F.col("deg")).alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .select(
-                "node",
-                F.round(
-                    (1.0 - _PPR_D) * teleport
-                    + _PPR_D * F.coalesce(F.col("inflow"), F.lit(0.0)),
-                    9,
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return ranks.select(
-        "node", F.round("rank", 6).alias("ppr")
-    ).orderBy("node")
+    return ranks.select("node", F.col("rank").alias("ppr")).orderBy("node")
 
 
 # ===========================================================================

@@ -12,8 +12,6 @@ bigram language-model scoring, and triangle counting:
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from arrow_supercluster_spark.operators import decontam, graph, relevance
 from arrow_supercluster_spark.plans.registry_core import register
 from arrow_supercluster_spark.plans.registry_ext import SQL_TOKS, _docs
@@ -136,15 +134,5 @@ def q_triangle_count(spark, sf_dir):
     triangle enumerated once via id-ordering (a < b < c). Completes the
     graph trio: components (connectivity), PageRank (centrality),
     triangles (cohesion)."""
-    ev = read_events(spark, sf_dir).select(
-        "user_id", "event_type", F.date_trunc("hour", "ts").alias("h")
-    )
-    a = ev.select(F.col("user_id").alias("src"), "event_type", "h")
-    b = ev.select(F.col("user_id").alias("dst"), "event_type", "h")
-    edges = (
-        a.join(b, ["event_type", "h"])
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
+    edges = graph.cooccurrence_edges(read_events(spark, sf_dir))
     return graph.triangle_counts(edges)

@@ -79,17 +79,7 @@ def q_label_prop(spark, sf_dir):
     degree-bounded window; labels stay |nodes|-sized; localCheckpoint
     keeps lineage O(1). Oracle unrolls the same three rounds as chained
     CTEs — the whole adoption algebra is differentially checked."""
-    ev = read_events(spark, sf_dir).select(
-        "user_id", "event_type", F.date_trunc("hour", "ts").alias("h")
-    )
-    a = ev.select(F.col("user_id").alias("src"), "event_type", "h")
-    b = ev.select(F.col("user_id").alias("dst"), "event_type", "h")
-    edges = (
-        a.join(b, ["event_type", "h"])
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
+    edges = graph.cooccurrence_edges(read_events(spark, sf_dir))
     return graph.label_propagation(edges, iterations=_LP_ITERS)
 
 

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from arrow_supercluster_spark.operators import graph
 from arrow_supercluster_spark.plans.registry_core import register
 from arrow_supercluster_spark.sources.tables import read_events
 
@@ -60,18 +61,8 @@ def q_bfs_hops(spark, sf_dir):
     frontiers stay |nodes|-bounded, the driver only counts rounds.
     Oracle: recursive CTE minimizing hops — a different evaluation
     strategy for the same fixpoint.""".format(h=_BFS_MAX_HOPS)
-    ev = read_events(spark, sf_dir).select(
-        "user_id", "event_type", F.date_trunc("hour", "ts").alias("h")
-    )
-    a = ev.select(F.col("user_id").alias("src"), "event_type", "h")
-    b = ev.select(F.col("user_id").alias("dst"), "event_type", "h")
-    edges = (
-        a.join(b, ["event_type", "h"])
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    edges = graph.cooccurrence_edges(read_events(spark, sf_dir))
+    edges = edges.localCheckpoint(eager=False)
     nodes = (
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))

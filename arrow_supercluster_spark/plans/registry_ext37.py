@@ -33,20 +33,6 @@ _SQL_UND = """
 """
 
 
-def _spark_undirected(spark, sf_dir):
-    ev = read_events(spark, sf_dir).select(
-        "user_id", "event_type", F.date_trunc("hour", "ts").alias("h")
-    )
-    a = ev.select(F.col("user_id").alias("src"), "event_type", "h")
-    b = ev.select(F.col("user_id").alias("dst"), "event_type", "h")
-    return (
-        a.join(b, ["event_type", "h"])
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
-
-
 @register(
     "q_clustering_coeff",
     f"""
@@ -91,7 +77,7 @@ def q_clustering_coeff(spark, sf_dir):
     two-equi-join + closing-semi-join plan; degrees are one agg;
     the division is a |nodes|-row projection."""
     und = (
-        _spark_undirected(spark, sf_dir)
+        graph.cooccurrence_edges(read_events(spark, sf_dir))
         .select(
             F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
         )
@@ -154,7 +140,7 @@ def q_degree_assortativity(spark, sf_dir):
     agg broadcast onto the edges, then a single correlation aggregate;
     rounded to 6 (moment summation order)."""
     und = (
-        _spark_undirected(spark, sf_dir)
+        graph.cooccurrence_edges(read_events(spark, sf_dir))
         .select(
             F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
         )

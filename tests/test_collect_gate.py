@@ -54,7 +54,8 @@ ALLOWLIST: dict[str, str] = {
     "functions/small_side.py::small_side":
         "limit(cap + 1): at most cap + 1 rows per call, one job (the "
         "callers' literal caps: connected_components_adaptive's 200k "
-        "edges, the radius hierarchy's _DRIVER_LEVEL_CAP)",
+        "edges, the radius hierarchy's _DRIVER_LEVEL_CAP, pagerank's "
+        "_DRIVER_EDGE_CAP of 2M edges)",
     "operators/radius_cluster.py::radius_hierarchy":
         "small_side gates of at most _DRIVER_LEVEL_CAP + 1 rows each "
         "(one before the first kernel level, one after each distributed "

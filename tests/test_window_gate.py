@@ -24,9 +24,9 @@ from arrow_supercluster_spark.plans.registry import REGISTRY
 # (bound stated), verified in the round-4 audit. User/document-dimension
 # frames do NOT qualify — those must use functions/distrank.py.
 ALLOWED_GLOBAL_WINDOWS = {
-    # (q_get_leaves was de-weaked in round 5: TakeOrdered page + bounded
-    #  self-join rank — a zoom-0 cluster's leaf set is corpus-sized, so
-    #  "≤ cluster size" was not a real bound)
+    # (q_get_leaves ranks only its TakeOrdered 12-row page, listed below;
+    #  a window over the whole leaf set would not qualify — a zoom-0
+    #  cluster's leaf set is corpus-sized)
     # calendar-time frames: one row per day/hour — years of data ≈ 10^3
     "q_daily_anomaly", "q_cusum_changepoint", "q_ema_daily",
     "q_autocorrelation", "q_kaplan_meier", "q_hazard_rate", "q_ols_2var",
@@ -70,6 +70,7 @@ ALLOWED_GLOBAL_WINDOWS = {
     "q_bh_fdr",          # p-value ranking over |event types| rows
     "q_rank_aggregation",  # three rankings over the |sources| frame
     "q_reservoir_sample",  # rank over the TakeOrdered top-25 page
+    "q_get_leaves",        # row_number over the TakeOrdered 12-row page
     # r7 EDF normality suite: running count over the value-collapsed
     # frame, bounded by the <=100,001 distinct cent values of the
     # [0,1000) 2-decimal domain (the q_hist_quantiles class)
