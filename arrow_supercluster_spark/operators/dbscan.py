@@ -10,8 +10,8 @@ of the component — stable under any partitioning.
 
 Execution shape (the 100 TB story):
 1. eps-sized grid cells; each point replicated into its 3x3 neighbor
-   cells and equi-joined on the cell key (the radius_cluster.py relational
-   KDBush-within pattern) — the only quadratic work is within one cell
+   cells and equi-joined on the cell key (the relational KDBush-within
+   pattern of radius_cluster.py's SQL twin) — the only quadratic work is within one cell
    neighborhood, never all-pairs;
 2. one agg for neighbor counts (core flag);
 3. min-label propagation + pointer jumping over CORE-CORE edges only

@@ -1,7 +1,8 @@
 """Relational radius clustering — A1 variant (c): TRUE within-radius
 clustering (Euclidean r-ball, like the reference's KDBush search — not the
-grid-cell approximation) expressed entirely in joins/aggregates, so it is
-deterministic, parallel, AND oracle-checkable in SQL.
+grid-cell approximation) by min-id rules, so it is deterministic,
+parallel, AND oracle-checkable in SQL (`sql_radius_cluster` states one
+level as joins and aggregates).
 
 Semantics ("min-order-neighbor" clustering; a relational projection of the
 reference's insertion-order greedy, arrow-cluster-engine.ts:354-416):
@@ -25,32 +26,43 @@ because its would-be origin was absorbed) — a sequential-scan effect no
 bounded-round parallel algorithm reproduces; this variant resolves those
 items deterministically to their next valid origin or passthrough.
 
-Execution shape (the 100 TB story): items get a cell key at size exactly
-r; the candidate join is an equi-join on the 3×3 neighbor cells (the
-relational KDBush range query, SURVEY §1.1 spatial-index row) followed by
-the exact distance predicate; then two hash aggregations (argmin origin,
-cluster rollup) and one self-join for validity. No Python, no recursion.
-Per-level input of the hierarchy loop is the previous level's clusters
-(exponentially shrinking), so pair fan-out stays bounded even at low
-zooms.
+Execution shape: one kernel serves both paths.  `_assign` runs steps
+2-4 in NumPy: `_min_neighbor` finds each item's minimum-id neighbour
+within r (cell key floor(x / r), the 3×3 neighbour cells, the float64
+dx·dx + dy·dy <= r·r test), evaluating candidate pairs in chunks of
+`_PAIR_CHUNK` with per-item running minima, so memory is O(items +
+chunk) whatever the pair fan-out.
 
-Driver tail: each level of the hierarchy loop costs a pair join, four
-aggregations and a checkpoint job however few items it holds, so once a
-level has at most `_DRIVER_LEVEL_CAP` items (one bounded `small_side`
-collect decides), every remaining zoom runs in NumPy with the same
-candidate set (cell key floor(x / r), 3×3 neighbor cells, the float64
-dx·dx + dy·dy <= r·r test) and the same min-order-neighbor rules, and the
-result goes back as one createDataFrame. Candidate pairs are evaluated in
-chunks of `_PAIR_CHUNK` with per-item running minima, so driver memory
-is O(items + chunk) whatever the pair fan-out.
+A distributed level (`radius_cluster_level`) cuts the plane into tiles
+of `_TILE_CELLS` × `_TILE_CELLS` = 64 × 64 cells and copies each item
+into every tile within 2 cells of its own cell, flagged `own` in its
+home tile only.  Two cells of halo are enough: an owned item only
+tests the items of its 3×3 cells, and their validity needs only THEIR
+3×3 cells.  One repartition by tile, one mapInPandas per partition
+(`_assign` over the partition's rows, deduplicated by id; the owned
+items come out with their cluster id), then one window per cluster id
+rolls the members up.
+An origin is a member of its own cluster, so a cluster's row is its
+origin's row and the level needs no join.  Parallelism is the number of
+occupied tiles: the unit square spans 1/r cells, so with the default
+options zoom 4 has 4×4 tiles and zooms 0-2 a single one.  Those levels
+are small (each level consumes the previous level's clusters) and
+usually run on the driver tail anyway.
+
+Driver tail: each distributed level costs a shuffle, a Python stage and
+a checkpoint job however few items it holds, so once a level has at most
+`_DRIVER_LEVEL_CAP` items (one bounded `small_side` collect decides),
+every remaining zoom runs `_assign` on the driver over the whole level
+and the result goes back as one createDataFrame.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pyarrow as pa
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from arrow_supercluster_spark.config import DEFAULT_OPTIONS, ClusterOptions
@@ -60,58 +72,16 @@ from arrow_supercluster_spark.functions.small_side import small_side
 # driver (the bound of connected_components_adaptive's union-find fast
 # path).
 _DRIVER_LEVEL_CAP = 200_000
-# Candidate pairs evaluated per NumPy chunk in the driver tail: about a
-# dozen int64/float64 temporaries of this length are live at once.
+# Candidate pairs evaluated per NumPy chunk: about a dozen int64/float64
+# temporaries of this length are live at once.
 _PAIR_CHUNK = 1 << 20
+# Side of a distributed level's tile, in cells of size r: the 2-cell
+# halo adds (68² − 64²) / 64² ≈ 13 % copies per tile.
+_TILE_CELLS = 64
 _NO_NEIGHBOR = np.iinfo(np.int64).max
 
 _SCHEMA = "zoom int, id long, x double, y double, num_points long, is_cluster boolean"
-
-
-def _neighbor_pairs(items: DataFrame, r: float) -> DataFrame:
-    """(a_id, a_ord, b_id …) pairs with dist ≤ r via 3×3 cell equi-join.
-
-    Each left item is replicated into its 9 neighbor cells (explode of a
-    constant 3×3 offset array — a narrow map), then equi-joined against
-    the items on the cell key: the relational form of a KDBush within()
-    query. Both sides shuffle once on the cell key."""
-    cx = F.floor(F.col("x") / F.lit(r))
-    cy = F.floor(F.col("y") / F.lit(r))
-    right = items.select(
-        F.col("id").alias("b_id"),
-        F.col("x").alias("b_x"),
-        F.col("y").alias("b_y"),
-        F.col("num_points").alias("b_num"),
-        cx.alias("b_cx"),
-        cy.alias("b_cy"),
-    )
-    offsets = F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx in (-1, 0, 1)
-            for dy in (-1, 0, 1)
-        ]
-    )
-    left = (
-        items.select(
-            F.col("id").alias("a_id"),
-            F.col("x").alias("a_x"),
-            F.col("y").alias("a_y"),
-            cx.alias("a_cx"),
-            cy.alias("a_cy"),
-        )
-        .withColumn("off", F.explode(offsets))
-        .select(
-            "a_id", "a_x", "a_y",
-            (F.col("a_cx") + F.col("off.dx")).alias("b_cx"),
-            (F.col("a_cy") + F.col("off.dy")).alias("b_cy"),
-        )
-    )
-    dx = F.col("a_x") - F.col("b_x")
-    dy = F.col("a_y") - F.col("b_y")
-    return left.join(right, ["b_cx", "b_cy"]).filter(
-        dx * dx + dy * dy <= F.lit(r * r)
-    )
+_ASSIGNED = "id long, x double, y double, num_points long, cluster_id long"
 
 
 def radius_cluster_level(
@@ -119,63 +89,64 @@ def radius_cluster_level(
 ) -> DataFrame:
     """One clustering level: items (id, x, y, num_points) → clusters/
     passthroughs at `zoom` with schema (id, x, y, num_points, is_cluster,
-    origin of id = min member id for clusters)."""
+    origin of id = min member id for clusters).  Tiled `_assign`, then a
+    window rollup per cluster id (see the module doc)."""
     r = opts.radius / (opts.extent * float(2**zoom))
-    pairs = _neighbor_pairs(items, r).select("a_id", "b_id")
+    side = float(_TILE_CELLS)
+    cx = F.floor(F.col("x") / F.lit(r))
+    cy = F.floor(F.col("y") / F.lit(r))
 
-    # step 2: origin(p) = min-order neighbor
-    origin = pairs.groupBy("a_id").agg(F.min("b_id").alias("origin_id"))
-    # step 3: valid origins
-    valid = origin.filter(F.col("a_id") == F.col("origin_id")).select(
-        F.col("a_id").alias("valid_id")
+    def tiles(c):
+        return F.explode(F.sequence(F.floor((c - 2) / side), F.floor((c + 2) / side)))
+
+    tiled = (
+        items.select("id", "x", "y", "num_points", cx.alias("cx"), cy.alias("cy"))
+        .withColumn("tx", tiles(F.col("cx")))
+        .withColumn("ty", tiles(F.col("cy")))
+        .repartition("tx", "ty")
+        .select(
+            "id", "x", "y", "num_points",
+            (
+                (F.col("tx") == F.floor(F.col("cx") / side))
+                & (F.col("ty") == F.floor(F.col("cy") / side))
+            ).alias("own"),
+        )
     )
-    # step 4: p → min-order VALID neighbor (or none).  r11 (VERDICT r10
-    # "Next round" #5): ONE pair derivation per level.  The r10 form ran
-    # the 9-cell explode+join a SECOND time with the right side
-    # restricted to valid origins; the assignment pair set is instead
-    # the already-derived `pairs` semi-joined to the valid set on b_id —
-    # Spark's exchange reuse computes the pair join's shuffles once (the
-    # two subtrees are identical), and the semi-join's right side reuses
-    # origin's aggregation partitioning.  Alternated A/B over the full
-    # 17-level hierarchy at sf0.1 (tools/radius_ab.py): 26.7/24.0 s →
-    # 23.1/23.5 s, output exactly identical (exceptAll = 0 both ways).
-    # Eagerly checkpointing `pairs` instead was measured SLOWER (30-33 s
-    # — one extra job per level, the same shape r10 reverted for
-    # members/grouped truncates).
-    assign = (
-        pairs.join(valid, pairs.b_id == valid.valid_id, "leftsemi")
-        .groupBy("a_id")
-        .agg(F.min("b_id").alias("cluster_id"))
+
+    def assign_partition(batches):
+        frames = list(batches)
+        if not frames:
+            return
+        part = pd.concat(frames, ignore_index=True)
+        # an item lands here once per tile of this partition it touches
+        part = part.sort_values("own", ascending=False, kind="stable").drop_duplicates("id")
+        own = part["own"].to_numpy(dtype=bool)
+        cluster = _assign(
+            part["id"].to_numpy(dtype=np.int64),
+            part["x"].to_numpy(dtype=np.float64),
+            part["y"].to_numpy(dtype=np.float64),
+            r, own,
+        )
+        yield part.loc[own, ["id", "x", "y", "num_points"]].assign(cluster_id=cluster)
+
+    # step 5: rollup per cluster; groups below min_points dissolve back to
+    # their members, which pass through unchanged
+    w = Window.partitionBy("cluster_id")
+    rolled = tiled.mapInPandas(assign_partition, _ASSIGNED).select(
+        "*",
+        F.sum("num_points").over(w).alias("total"),
+        F.sum(F.col("x") * F.col("num_points")).over(w).alias("wx"),
+        F.sum(F.col("y") * F.col("num_points")).over(w).alias("wy"),
+        F.count(F.lit(1)).over(w).alias("n_members"),
     )
-    members = (
-        items.join(assign, items.id == assign.a_id, "left")
-        .withColumn("cluster_id", F.coalesce("cluster_id", "id"))
+    keep = (F.col("n_members") > 1) & (F.col("total") >= opts.min_points)
+    return rolled.filter(~keep | (F.col("id") == F.col("cluster_id"))).select(
+        "id",
+        F.when(keep, F.col("wx") / F.col("total")).otherwise(F.col("x")).alias("x"),
+        F.when(keep, F.col("wy") / F.col("total")).otherwise(F.col("y")).alias("y"),
+        F.when(keep, F.col("total")).otherwise(F.col("num_points")).alias("num_points"),
+        (keep | (F.col("num_points") > 1)).alias("is_cluster"),
     )
-    # step 5: rollup per cluster; dissolve groups below min_points back to
-    # singletons (pass through unchanged)
-    grouped = members.groupBy("cluster_id").agg(
-        F.sum("num_points").alias("num_points"),
-        F.sum(F.col("x") * F.col("num_points")).alias("wx"),
-        F.sum(F.col("y") * F.col("num_points")).alias("wy"),
-        F.count(F.lit(1)).alias("n_members"),
-    )
-    clusters = grouped.filter(
-        (F.col("n_members") > 1) & (F.col("num_points") >= opts.min_points)
-    ).select(
-        F.col("cluster_id").alias("id"),
-        (F.col("wx") / F.col("num_points")).alias("x"),
-        (F.col("wy") / F.col("num_points")).alias("y"),
-        "num_points",
-        F.lit(True).alias("is_cluster"),
-    )
-    dissolved = grouped.filter(
-        ~((F.col("n_members") > 1) & (F.col("num_points") >= opts.min_points))
-    ).select(F.col("cluster_id").alias("d_id"))
-    singles = (
-        members.join(dissolved, members.cluster_id == dissolved.d_id, "leftsemi")
-        .select("id", "x", "y", "num_points", (F.col("num_points") > 1).alias("is_cluster"))
-    )
-    return clusters.unionByName(singles)
 
 
 def _rank(sorted_vals: np.ndarray, q: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -216,9 +187,9 @@ def _min_neighbor(
     bx: np.ndarray, by: np.ndarray, bval: np.ndarray, r: float,
 ) -> np.ndarray:
     """For each a item, the minimum `bval` over b items within r, or
-    _NO_NEIGHBOR — the NumPy twin of `_neighbor_pairs` + min-aggregation:
-    same cell key floor(x / r), same 3×3 neighbor cells, same float64
-    dx·dx + dy·dy <= r·r test, so the candidate set is the join's.
+    _NO_NEIGHBOR — the SQL twin's pair join + min-aggregation: same cell
+    key floor(x / r), same 3×3 neighbor cells, same float64 dx·dx + dy·dy
+    <= r·r test, so the candidate set is the join's.
 
     b items are sorted by (cell, bval); each (a item, occupied neighbor
     cell) is one "row" naming a contiguous b range.  A row's minimum is
@@ -277,6 +248,21 @@ def _min_neighbor(
     return out
 
 
+def _assign(
+    ids: np.ndarray, x: np.ndarray, y: np.ndarray, r: float, own: np.ndarray
+) -> np.ndarray:
+    """Steps 2-4: the cluster id of each `own` item, its min-id VALID
+    neighbor within r, else its own id.  Validity comes from all the
+    items, so an owned item's answer is exact whenever the items hold
+    every item within 2 cells of it."""
+    # steps 2-3: origin = min-id neighbor (the self-pair is a candidate,
+    # so origin <= id); valid origins are their own origin
+    valid = _min_neighbor(x, y, x, y, ids, r) == ids
+    # step 4
+    cluster = _min_neighbor(x[own], y[own], x[valid], y[valid], ids[valid], r)
+    return np.where(cluster == _NO_NEIGHBOR, ids[own], cluster)
+
+
 def _cluster_level_np(
     ids: np.ndarray, x: np.ndarray, y: np.ndarray, num: np.ndarray,
     r: float, min_points: int,
@@ -285,12 +271,7 @@ def _cluster_level_np(
     is_cluster) of the clusters, then of the passthrough items."""
     if len(ids) == 0:
         return ids, x, y, num, np.zeros(0, dtype=bool)
-    # steps 2-3: origin = min-id neighbor (the self-pair is a candidate,
-    # so origin <= id); valid origins are their own origin
-    valid = _min_neighbor(x, y, x, y, ids, r) == ids
-    # step 4: min-id VALID neighbor, else the item's own id
-    cluster = _min_neighbor(x, y, x[valid], y[valid], ids[valid], r)
-    cluster = np.where(cluster == _NO_NEIGHBOR, ids, cluster)
+    cluster = _assign(ids, x, y, r, np.ones(len(ids), dtype=bool))
     # step 5: rollup per cluster id
     order = np.argsort(cluster, kind="stable")
     cid, first, n_members = np.unique(cluster[order], return_index=True, return_counts=True)
@@ -339,7 +320,7 @@ def _driver_tail(
 def radius_hierarchy(
     points_xy: DataFrame, opts: ClusterOptions = DEFAULT_OPTIONS
 ) -> DataFrame:
-    """Full top-down hierarchy with the relational radius kernel: level z
+    """Full top-down hierarchy with the radius kernel: level z
     consumes level z+1's output. Returns union with a zoom column (zoom of
     the level the items appear at, leaf_zoom..min_zoom), schema
     (zoom int, id long, x double, y double, num_points long, is_cluster
@@ -348,8 +329,9 @@ def radius_hierarchy(
 
     Before each kernel level one bounded `small_side` collect checks the
     level's size: at most `_DRIVER_LEVEL_CAP` items and that level and
-    every remaining zoom come from the driver tail (`_driver_tail`, see
-    the module doc). Larger levels run distributed — driver loop,
+    every remaining zoom come from the driver tail (`_driver_tail`).
+    Larger levels run distributed (`radius_cluster_level`: tiled `_assign`
+    and a window rollup, see the module doc) — driver loop,
     localCheckpoint per level to keep lineage flat — and re-check after
     each level they produce."""
     spark = points_xy.sparkSession
@@ -361,73 +343,14 @@ def radius_hierarchy(
     if local is not None:
         return _driver_tail(spark, local, zooms, opts, level_zoom=opts.leaf_zoom)
 
-    items = items.localCheckpoint()
+    cur = items.localCheckpoint()
     levels = [
-        items.select(
+        cur.select(
             F.lit(opts.leaf_zoom).alias("zoom"), "id", "x", "y", "num_points",
             (F.col("num_points") > 1).alias("is_cluster"),
         )
     ]
-
-    # r11 (VERDICT r10 "Next round" #5, guide §2.6 latency): a level
-    # whose radius is below the corpus's minimum pairwise distance is an
-    # exact NO-OP — pairs contains only self-pairs, every item passes
-    # through unchanged (same id/x/y/num_points; is_cluster re-derived
-    # as num_points > 1, which is what the passthrough branch emits
-    # too), so the full kernel (9-cell join + 4 aggregations + one
-    # checkpoint job per level) computes nothing.  Find d²min once with
-    # a doubling probe — the 3×3 cell join at cell size r captures EVERY
-    # pair within r, so the first non-NULL min is the exact global
-    # minimum — and emit the leading run of levels with r(z)² < d²min as
-    # passthroughs.  At zoom ranges finer than the data resolution this
-    # removes half the hierarchy's jobs; on dense data the first probe
-    # (max_zoom) finds a pair immediately and costs one narrow join+agg.
-    # The probe is a 1-row agg collect (gate-allowlisted: ≤ ceil(17/3)
-    # single-row probes per hierarchy).
-    d2min = None
-    probe_zs = list(zooms[::3])
-    if probe_zs and probe_zs[-1] != opts.min_zoom:
-        # always probe the coarsest level: d²min=None must certify that
-        # even the LARGEST radius pairs nothing
-        probe_zs.append(opts.min_zoom)
-    for probe_z in probe_zs:
-        r = opts.radius / (opts.extent * float(2**probe_z))
-        row = (
-            _neighbor_pairs(items, r)
-            .filter(F.col("a_id") != F.col("b_id"))
-            .agg(
-                F.min(
-                    (F.col("a_x") - F.col("b_x"))
-                    * (F.col("a_x") - F.col("b_x"))
-                    + (F.col("a_y") - F.col("b_y"))
-                    * (F.col("a_y") - F.col("b_y"))
-                ).alias("d2")
-            )
-            .collect()[0]
-        )
-        if row[0] is not None:
-            d2min = float(row[0])
-            break
-    first_real = None
-    if d2min is not None:
-        for z in zooms:
-            r = opts.radius / (opts.extent * float(2**z))
-            if r * r >= d2min:
-                first_real = z
-                break
-
-    cur = items
     for z in zooms:
-        if first_real is None or z > first_real:
-            # exact no-op level: passthrough (identical to what the
-            # kernel emits when pairs has only self-pairs)
-            levels.append(
-                cur.select(
-                    F.lit(z).alias("zoom"), "id", "x", "y", "num_points",
-                    (F.col("num_points") > 1).alias("is_cluster"),
-                )
-            )
-            continue
         out = radius_cluster_level(cur, z, opts).localCheckpoint()
         levels.append(
             out.select(F.lit(z).alias("zoom"), "id", "x", "y", "num_points", "is_cluster")

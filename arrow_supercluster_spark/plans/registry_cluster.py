@@ -283,38 +283,38 @@ def q_get_leaves(spark, sf_dir):
 )
 def q_expansion_zoom(spark, sf_dir):
     """Q4 — getClusterExpansionZoom (arrow-cluster-engine.ts:240-256): walk
-    down from the anchor cluster until it splits into >1 child. Single-pass
-    Spark form: for each zoom, count distinct child cells among the points
-    sharing the anchor's cell; answer = min zoom with >1 (searched z∈[0,9))."""
-    pts = _points_xy(spark, sf_dir)
-    rows = []
-    for z in range(0, 9):
-        scale_p = OPTS.cell_scale(z)
-        cells = pts.withColumns(
-            {
-                "pcx": F.floor(F.col("x") * F.lit(scale_p)),
-                "pcy": F.floor(F.col("y") * F.lit(scale_p)),
-            }
+    down from the anchor cluster until it splits into >1 child. One scan:
+    cells are computed once at zoom 9, and a point's cell at zoom z is
+    cell9 >> (9 − z), exact because the cell scales differ by powers of
+    two. Each point is crossed with the child zooms 1..9 and kept where it
+    shares the anchor's cell one zoom up; the distinct child cells are
+    counted per zoom; answer = min zoom with >1 (searched z∈[1,9])."""
+    cells = gc.with_cells(_points_xy(spark, sf_dir), 9, OPTS).select(
+        "id", "cell_x", "cell_y"
+    )
+    anchor = cells.filter(F.col("id") == 1).select(
+        F.col("cell_x").alias("ax"), F.col("cell_y").alias("ay")
+    )
+    zooms = spark.range(1, 10).select(F.col("id").cast("int").alias("zoom"))
+
+    def at(c, zoom):  # F.shiftright takes only a literal shift
+        return F.call_function("shiftright", F.col(c), 9 - zoom)
+
+    parent = F.col("zoom") - 1
+    return (
+        cells.crossJoin(F.broadcast(zooms))
+        .crossJoin(F.broadcast(anchor))
+        .filter(
+            (at("cell_x", parent) == at("ax", parent))
+            & (at("cell_y", parent) == at("ay", parent))
         )
-        anchor = cells.filter(F.col("id") == 1).select(
-            F.col("pcx").alias("ax"), F.col("pcy").alias("ay")
+        .groupBy("zoom")
+        .agg(
+            F.countDistinct(at("cell_x", F.col("zoom")), at("cell_y", F.col("zoom")))
+            .alias("n_children")
         )
-        child = gc.with_cells(cells, z + 1, OPTS)
-        rows.append(
-            child.join(
-                F.broadcast(anchor),
-                (F.col("pcx") == F.col("ax")) & (F.col("pcy") == F.col("ay")),
-            )
-            .agg(
-                F.lit(z + 1).alias("zoom"),
-                F.countDistinct("cell_x", "cell_y").alias("n_children"),
-            )
-        )
-    splits = rows[0]
-    for r in rows[1:]:
-        splits = splits.unionByName(r)
-    return splits.filter(F.col("n_children") > 1).agg(
-        F.min("zoom").alias("expansion_zoom")
+        .filter(F.col("n_children") > 1)
+        .agg(F.min("zoom").alias("expansion_zoom"))
     )
 
 

@@ -18,9 +18,11 @@ def _mk_radius(zoom: int):
     def q(spark, sf_dir, _z=zoom):
         """A1 variant (c) — relational TRUE-radius clustering
         (min-order-neighbor semantics, operators/radius_cluster.py): the
-        r-ball neighbor search is a 3×3-cell equi-join (the relational
-        KDBush within()), origins and assignments are min-aggregations —
-        fully deterministic, parallel, and SQL-expressible, unlike the
+        r-ball neighbor search runs per spatial tile (cells of size r plus
+        a 2-cell halo) in the NumPy kernel the driver tail shares, origins
+        and assignments are min-id rules, and one window per cluster rolls
+        members up — fully deterministic, parallel, and SQL-expressible
+        (the twin states it as a 3×3-cell equi-join), unlike the
         sequential greedy scan."""
         pts = _points_xy(spark, sf_dir).select(
             "id", "x", "y", F.lit(1).cast("long").alias("num_points")
@@ -43,8 +45,8 @@ for _z in (4, 6):
 
 @register("q_cluster_radius_hier", None)
 def q_cluster_radius_hier(spark, sf_dir):
-    """Full top-down hierarchy with the relational radius kernel (driver
-    loop over shrinking cluster levels; rows-only — the 18-level
+    """Full top-down hierarchy with the radius kernel (tiled levels over
+    shrinking cluster levels, then the driver tail; rows-only — the 18-level
     composition is checked by conservation/determinism tests in
     tests/test_radius_cluster.py)."""
     pts = _points_xy(spark, sf_dir)

@@ -56,12 +56,6 @@ ALLOWLIST: dict[str, str] = {
         "callers' literal caps: connected_components_adaptive's 200k "
         "edges, the radius hierarchy's _DRIVER_LEVEL_CAP, pagerank's "
         "_DRIVER_EDGE_CAP of 2M edges)",
-    "operators/radius_cluster.py::radius_hierarchy":
-        "small_side gates of at most _DRIVER_LEVEL_CAP + 1 rows each "
-        "(one before the first kernel level, one after each distributed "
-        "level) plus, on the distributed path, 1-row min-pair-distance "
-        "probe aggs: <= ceil(zoom_depth/3)+1 single-row collects per "
-        "hierarchy (the leading no-op-level skip)",
     "operators/greedy.py::greedy_hierarchy":
         "1-row (count, max_id) agg fixing the cluster-id space",
     "operators/greedy.py::greedy_hierarchy_cc":

@@ -54,34 +54,6 @@ def test_level_partition_invariance(spark, sf_dir, n_parts):
     pd.testing.assert_frame_equal(base, got)
 
 
-def test_members_within_radius_of_origin(spark, sf_dir):
-    """Every cluster member is within r of its origin — the defining
-    r-ball property (cluster_id = origin id; origin position is the
-    origin point's own position)."""
-    zoom = 6
-    r = OPTS.radius / (OPTS.extent * 2.0**zoom)
-    pts = _pts(spark, sf_dir)
-    pairs = rc._neighbor_pairs(pts, r)
-    # re-derive the assignment exactly as the operator does
-    origin = pairs.groupBy("a_id").agg(F.min("b_id").alias("origin_id"))
-    valid = origin.filter(F.col("a_id") == F.col("origin_id")).select(
-        F.col("a_id").alias("valid_id")
-    )
-    assign = (
-        pairs.join(valid, pairs.b_id == valid.valid_id)
-        .groupBy("a_id")
-        .agg(F.min("b_id").alias("cluster_id"))
-    )
-    # all assigned pairs came from `pairs`, which enforces dist <= r,
-    # so verify by construction: assignment ⊆ pairs
-    bad = assign.join(
-        pairs.select("a_id", F.col("b_id").alias("cluster_id")).distinct(),
-        ["a_id", "cluster_id"],
-        "left_anti",
-    )
-    assert bad.count() == 0
-
-
 def test_hierarchy_conservation_all_levels(spark, sf_dir):
     pts = gc.prepare_points(derived_points(spark, sf_dir))
     total = pts.count()

@@ -89,8 +89,20 @@ def _both_paths(monkeypatch, pts, opts, mixed_cap=None):
 STRADDLE_OPTS = ClusterOptions(max_zoom=8)
 
 
-@pytest.mark.parametrize("fixture", ["lcg300", "hotspots", "straddling", "straddling_adjacent"])
-def test_tail_matches_distributed(spark, monkeypatch, fixture):
+def _tiled(cases):
+    """Each case at the default tile size, under its own id, and at tiles
+    of one cell, where every item's 2-cell halo crosses tile edges."""
+    return [pytest.param(c, None, id=c) for c in cases] + [
+        pytest.param(c, 1, id=f"{c}-tile1") for c in cases
+    ]
+
+
+@pytest.mark.parametrize(
+    ("fixture", "tile_cells"), _tiled(["lcg300", "hotspots", "straddling", "straddling_adjacent"])
+)
+def test_tail_matches_distributed(spark, monkeypatch, fixture, tile_cells):
+    if tile_cells is not None:
+        monkeypatch.setattr(rc, "_TILE_CELLS", tile_cells)
     if fixture == "lcg300":
         x, y, ids = project(lcg_points(300))
         opts = DEFAULT_OPTIONS
@@ -100,7 +112,8 @@ def test_tail_matches_distributed(spark, monkeypatch, fixture):
     else:
         ids, x, y = _straddling(STRADDLE_OPTS, adjacent=fixture == "straddling_adjacent")
         opts = STRADDLE_OPTS
-    out = _both_paths(monkeypatch, _frame(spark, ids, x, y), opts, mixed_cap=len(ids) // 2)
+    mixed_cap = len(ids) // 2 if tile_cells is None else None
+    out = _both_paths(monkeypatch, _frame(spark, ids, x, y), opts, mixed_cap)
     assert set(out.zoom) == set(range(opts.min_zoom, opts.leaf_zoom + 1))
     assert (out.groupby("zoom").num_points.sum() == len(ids)).all()
     if fixture.startswith("straddling"):
@@ -110,8 +123,12 @@ def test_tail_matches_distributed(spark, monkeypatch, fixture):
         assert 11 not in set(lvl.id)
 
 
-@pytest.mark.parametrize("case", ["empty", "one_point", "identical", "max_below_min"])
-def test_degenerate_inputs(spark, monkeypatch, case):
+@pytest.mark.parametrize(
+    ("case", "tile_cells"), _tiled(["empty", "one_point", "identical", "max_below_min"])
+)
+def test_degenerate_inputs(spark, monkeypatch, case, tile_cells):
+    if tile_cells is not None:
+        monkeypatch.setattr(rc, "_TILE_CELLS", tile_cells)
     opts = ClusterOptions(max_zoom=3)
     ids, x, y = [1, 2, 3, 4, 5], [0.25] * 5, [0.75] * 5
     if case == "empty":
@@ -132,11 +149,14 @@ def test_degenerate_inputs(spark, monkeypatch, case):
 @pytest.mark.parametrize("chunk", [rc._PAIR_CHUNK, 5])
 @pytest.mark.parametrize("seed", [1, 2, 3])
 def test_min_neighbor_matches_brute_force(monkeypatch, seed, chunk):
-    """`_min_neighbor` against an O(n·m) scan of the join's candidate set
-    (3×3 cells of floor(x / r), then the float64 d² test).  Half the
-    coordinates are snapped to cell edges and repeated, the cases where a
-    bounding-box or early-exit shortcut would first go wrong; a tiny
-    chunk puts chunk boundaries inside rows' windows."""
+    """`_min_neighbor` and `_assign` against an O(n²) scan of the join's
+    candidate set (3×3 cells of floor(x / r), then the float64 d² test).
+    Half the coordinates are snapped to cell edges and repeated, the cases
+    where a bounding-box or early-exit shortcut would first go wrong; a
+    tiny chunk puts chunk boundaries inside rows' windows.  `_assign` gets
+    a partial `own` mask, as a tile does, and must give each owned item
+    its min-id valid neighbour, so every member lies within r of its
+    cluster's origin."""
     monkeypatch.setattr(rc, "_PAIR_CHUNK", chunk)
     rng = np.random.default_rng(seed)
     r = 0.01
@@ -146,18 +166,27 @@ def test_min_neighbor_matches_brute_force(monkeypatch, seed, chunk):
     x, y = pts[:, 0], pts[:, 1]
     ids = rng.permutation(len(x)).astype(np.int64) * 3
     b = rng.random(len(x)) < 0.6
-    got = rc._min_neighbor(x, y, x[b], y[b], ids[b], r)
+    own = rng.random(len(x)) < 0.5
 
     cx, cy = np.floor(x / r).astype(np.int64), np.floor(y / r).astype(np.int64)
-    dx = x[:, None] - x[None, b]
-    dy = y[:, None] - y[None, b]
+    dx = x[:, None] - x[None, :]
+    dy = y[:, None] - y[None, :]
     ok = (
-        (np.abs(cx[:, None] - cx[None, b]) <= 1)
-        & (np.abs(cy[:, None] - cy[None, b]) <= 1)
+        (np.abs(cx[:, None] - cx[None, :]) <= 1)
+        & (np.abs(cy[:, None] - cy[None, :]) <= 1)
         & (dx * dx + dy * dy <= r * r)
     )
-    want = np.where(ok, ids[None, b], rc._NO_NEIGHBOR).min(axis=1)
-    assert (got == want).all()
+
+    def brute_min(rows, cols):
+        return np.where(ok[np.ix_(rows, cols)], ids[None, cols], rc._NO_NEIGHBOR).min(axis=1)
+
+    every = np.ones(len(x), dtype=bool)
+    assert (rc._min_neighbor(x, y, x[b], y[b], ids[b], r) == brute_min(every, b)).all()
+
+    valid = brute_min(every, every) == ids
+    want = brute_min(own, valid)
+    want = np.where(want == rc._NO_NEIGHBOR, ids[own], want)
+    assert (rc._assign(ids, x, y, r, own) == want).all()
 
 
 def test_tail_runs_at_most_three_jobs(spark):
