@@ -211,18 +211,15 @@ def triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst") -> Dat
     DuckDB oracle is unaffected by dispatch.
     """
     und = undirected_edges(edges, src, dst)
-    # bounded probe: scans until cap+1 distinct nodes, one small collect
-    node_rows = (
+    # bounded probe: at most cap + 1 distinct nodes, one job
+    nodes = small_side(
         und.select(F.col("u").alias("n"))
         .unionAll(und.select(F.col("v").alias("n")))
-        .distinct()
-        .limit(_TRI_BITSET_MAX_NODES + 1)
-        .collect()
+        .distinct(),
+        _TRI_BITSET_MAX_NODES,
     )
-    if len(node_rows) <= _TRI_BITSET_MAX_NODES:
-        return _triangle_counts_bitset(
-            und, sorted(r.n for r in node_rows)
-        )
+    if nodes is not None:
+        return _triangle_counts_bitset(und, sorted(nodes.column("n").to_pylist()))
     return _triangle_counts_oriented(und)
 
 

@@ -15,48 +15,54 @@ Reimplements the SEMANTICS of the reference's `_cluster`
     (:378); otherwise the item (and, when it absorbed nothing but saw
     neighbors, each still-unvisited neighbor) passes through unchanged.
 
-The greedy scan is order-dependent — NOT expressible relationally. It runs
-as a pandas/numpy kernel inside `applyInPandas`:
+The greedy scan is order-dependent — NOT expressible relationally. It is
+written once, as `_scan_zoom_np`: one zoom over one level array, NumPy in
+and out. Three callers build on it:
 
-  * `greedy_hierarchy(mode="exact")` — ONE group ⇒ the kernel sees all
-    points in insertion order ⇒ bit-faithful to the single-threaded
-    reference. This is the golden-parity mode; at 100 TB it is the wrong
-    tool (single task) and exists because exactness is the contract.
-  * `greedy_hierarchy(mode="partitioned")` — the fast approximate scale
-    path: points are partitioned by their grid cell at `partition_zoom`
-    (coarse), each cell clustered independently in parallel. Clusters
-    never span partition-cell boundaries (documented, deterministic
-    divergence from the sequential order; results are invariant to
-    executor count because the partition key is data-derived, not
+  * `_scan_levels` runs it zoom by zoom over a whole level and returns
+    the RESULT_SCHEMA rows. `greedy_cluster_kernel` is input checks plus
+    one `_scan_levels` call; mode="cc"'s driver tail is one collect plus
+    one `_scan_levels` call.
+  * `_scan_one_zoom` wraps it for one pandas group: mode="cc"'s
+    per-component scans, on the driver and in `applyInPandas`.
+
+The modes of `greedy_hierarchy`:
+
+  * mode="exact" — ONE group ⇒ the kernel sees all points in insertion
+    order ⇒ bit-faithful to the single-threaded reference. This is the
+    golden-parity mode; at 100 TB it is the wrong tool (single task) and
+    exists because exactness is the contract.
+  * mode="partitioned" — the fast approximate scale path: points are
+    partitioned by their grid cell at `partition_zoom` (coarse), each
+    cell clustered independently in parallel. Clusters never span
+    partition-cell boundaries (documented, deterministic divergence from
+    the sequential order; results are invariant to executor count
+    because the partition key is data-derived, not
     spark-partition-derived).
-  * `greedy_hierarchy(mode="cc")` — the EXACT distributed path (SURVEY §7
-    Phase 4's halo design, strengthened): at each zoom, visited-state can
-    only propagate along within-r edges, so the greedy outcome of a
-    connected component of the r-proximity graph depends ONLY on that
-    component's points and their relative insertion order. Components are
-    therefore the *exact* dependency closure — the adaptive form of a
-    fixed halo, with no residual boundary effect and no conflicts to
-    resolve (a fixed-width halo breaks whenever a consumption chain
-    outruns it; a component never does). Per level: grid-bin 3×3
-    candidate join → within-r edge list → distributed connected
-    components → one-zoom sequential scan per component (applyInPandas,
-    insertion order preserved via global level indices) → global
-    re-rank of emissions (sort + zipWithIndex, range-partitioned — no
-    single-reducer window) to rebuild the reference's level array for id
-    encoding and the next level. Output is BIT-IDENTICAL to mode="exact"
-    (ids, parents, positions, pos) and invariant to input partitioning.
-    Round-4 cost pass: a level whose candidate edge list fits under
-    _CC_EDGE_CAP is handled almost entirely on the driver — the edge
-    probe carries both endpoints' item state, so union-find, the SAME
-    per-component `_scan_one_zoom` kernel, and a closed-form dense
-    re-rank (idx' = e0 + D(e0) + e1, `_rank_step_fn`) all run locally,
-    leaving two Spark jobs and zero shuffles per level; a lookahead
-    probe (bin at r·2^k with d² collected) proves identity stretches k+1
-    levels at a time. Levels above the cap take the fully distributed
-    fixpoint + zip-scan path (~3 shuffles + CC fixpoint per zoom), which
-    stays bit-identical (forced-fallback parity test). Worst case: at
-    the coarsest zooms components merge toward one group — but by then
-    the level array has already collapsed to cluster counts.
+  * mode="cc" — the EXACT distributed path (SURVEY §7 Phase 4's halo
+    design, strengthened): at each zoom, visited-state can only
+    propagate along within-r edges, so the greedy outcome of a connected
+    component of the r-proximity graph depends ONLY on that component's
+    points and their relative insertion order. Components are therefore
+    the *exact* dependency closure — the adaptive form of a fixed halo,
+    with no residual boundary effect and no conflicts to resolve (a
+    fixed-width halo breaks whenever a consumption chain outruns it; a
+    component never does). Per level: grid-bin 3×3 candidate join →
+    within-r edge list → connected components → one-zoom scan per
+    component (insertion order preserved via global level indices) →
+    dense re-rank of the emissions by (e0, e1) to rebuild the
+    reference's level array for id encoding and the next level. Output
+    is BIT-IDENTICAL to mode="exact" (ids, parents, positions, pos) and
+    invariant to input partitioning. A level whose candidate edges fit
+    under _CC_EDGE_CAP is labeled, scanned and re-ranked on the driver
+    (closed-form idx' = e0 + D(e0) + e1, `_rank_step_fn`), leaving two
+    Spark jobs and zero shuffles per level; a lookahead probe (bin at
+    r·2^k with d² collected) proves identity stretches k+1 levels at a
+    time. Levels above the cap take the fully distributed fixpoint +
+    zip-scan path (~3 shuffles + CC fixpoint per zoom), which stays
+    bit-identical (forced-fallback parity test). Once a level has at
+    most _CC_DRIVER_LEVEL_CAP items, every remaining zoom runs in
+    `_scan_levels` on the driver.
 
 Neighbor search: uniform grid binning at cell size r (the same
 decomposition KDBush's within() bounds) — each point probes its 3×3
@@ -64,8 +70,6 @@ neighborhood; O(n) per level instead of O(n²).
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -80,15 +84,183 @@ RESULT_SCHEMA = (
 
 def _neighbors_within(
     x: np.ndarray, y: np.ndarray, r: float
-) -> "dict[tuple[int, int], np.ndarray]":
-    """Uniform grid bins at cell size r → cell → member indices (sorted =
-    insertion order within each bin)."""
+) -> "tuple[dict[tuple[int, int], np.ndarray], np.ndarray, np.ndarray]":
+    """Uniform grid bins at cell size r → (cell → member indices sorted =
+    insertion order within each bin, cell x per item, cell y per item)."""
     cx = np.floor(x / r).astype(np.int64)
     cy = np.floor(y / r).astype(np.int64)
     bins: dict[tuple[int, int], list[int]] = {}
     for i in range(len(x)):
         bins.setdefault((cx[i], cy[i]), []).append(i)
     return {k: np.asarray(v, dtype=np.int64) for k, v in bins.items()}, cx, cy
+
+
+def _scan_zoom_np(
+    x: np.ndarray,
+    y: np.ndarray,
+    gidx: np.ndarray,
+    ids: np.ndarray,
+    nump: np.ndarray,
+    z: int,
+    opts: ClusterOptions,
+    total: int,
+):
+    """One zoom of the reference's greedy scan over a level array given in
+    scan order. `gidx` is each item's level index as the cluster id
+    encodes it: cid = (gidx << 5) + (z + 1) + total.
+
+    Returns (parent, src, out_id, out_x, out_y, out_n): `parent[i]` is the
+    id of the cluster item i joined at this zoom (-1 if none); the next
+    level's rows come in emission order, row j emitted while scanning
+    item `src[j]` (nondecreasing)."""
+    m = len(x)
+    r = opts.radius / (opts.extent * (2.0**z))
+    r2 = r * r
+    bins, bcx, bcy = _neighbors_within(x, y, r)
+
+    # one concatenated 3×3-neighborhood candidate array per occupied
+    # cell (shared by all points in the cell) — keeps the greedy scan
+    # itself O(n) with vectorized distance checks
+    hood_cache: dict[tuple[int, int], np.ndarray] = {}
+
+    def hood(cell: tuple[int, int]) -> np.ndarray:
+        got = hood_cache.get(cell)
+        if got is None:
+            parts = [
+                bins[c]
+                for c in (
+                    (cell[0] + dxc, cell[1] + dyc)
+                    for dxc in (-1, 0, 1)
+                    for dyc in (-1, 0, 1)
+                )
+                if c in bins
+            ]
+            got = np.concatenate(parts) if parts else np.empty(0, dtype=np.int64)
+            hood_cache[cell] = got
+        return got
+
+    visited = np.zeros(m, dtype=bool)
+    parent = np.full(m, -1, dtype=np.int64)
+    src: list[int] = []  # the scanned item that emitted each row
+    item: list[int] = []  # the item each row carries (or the cluster's origin)
+    cl_x: list[float] = []  # cluster rows only, in emission order
+    cl_y: list[float] = []
+    cl_n: list[int] = []
+
+    for i in range(m):
+        if visited[i]:
+            continue
+        visited[i] = True
+        xi, yi = x[i], y[i]
+        cand = hood((bcx[i], bcy[i]))
+        dx = x[cand] - xi
+        dy = y[cand] - yi
+        neigh = cand[(dx * dx + dy * dy <= r2) & (cand != i)]
+
+        n_origin = nump[i]
+        n_total = n_origin
+        for k in neigh:
+            if not visited[k]:
+                n_total += nump[k]
+
+        src.append(i)
+        item.append(i)
+        if n_total > n_origin and n_total >= opts.min_points:
+            wx = xi * n_origin
+            wy = yi * n_origin
+            cid = (gidx[i] << 5) + (z + 1) + total
+            for k in neigh:
+                if visited[k]:
+                    continue
+                visited[k] = True
+                wx += x[k] * nump[k]
+                wy += y[k] * nump[k]
+                parent[k] = cid
+            parent[i] = cid
+            cl_x.append(wx / n_total)
+            cl_y.append(wy / n_total)
+            cl_n.append(n_total)
+        elif n_total > 1:
+            for k in neigh:
+                if visited[k]:
+                    continue
+                visited[k] = True
+                src.append(i)
+                item.append(k)
+
+    rows = np.asarray(item, dtype=np.int64)
+    out_id, out_x, out_y, out_n = ids[rows], x[rows], y[rows], nump[rows]
+    # a cluster's row is its origin's, the only emitted item with a parent
+    head = parent[rows] != -1
+    out_id[head] = parent[rows[head]]
+    out_x[head] = cl_x
+    out_y[head] = cl_y
+    out_n[head] = cl_n
+    return parent, np.asarray(src, dtype=np.int64), out_id, out_x, out_y, out_n
+
+
+def _scan_levels(
+    level: pd.DataFrame,
+    z_hi: int,
+    opts: ClusterOptions,
+    total: int,
+    salt: int | None = None,
+    kdbush: bool = False,
+) -> pd.DataFrame:
+    """Zooms z_hi..min_zoom of the greedy scan over a whole level
+    (`cluster_id, x, y, num_points` in level order) → RESULT_SCHEMA rows
+    of every level it consumed and of the final one, zoom ascending.
+
+    The final level is labelled min(min_zoom, leaf_zoom): with
+    max_zoom < min_zoom no zoom is scanned and the hierarchy is the leaf
+    level alone, as radius_hierarchy returns it.
+
+    A level index is the row's position, with `salt` packed above it
+    (salt << 21 | index) into both cluster ids and `pos`. `pos` is the
+    level index, or with `kdbush` the row's KDBush within()-visit rank
+    (functions/kdbush_order.py), the reference's child-enumeration order
+    at any level size."""
+    x = level["x"].to_numpy(dtype=np.float64)
+    y = level["y"].to_numpy(dtype=np.float64)
+    ids = level["cluster_id"].to_numpy(dtype=np.int64)
+    nump = level["num_points"].to_numpy(dtype=np.int64)
+
+    def salted(p: np.ndarray) -> np.ndarray:
+        return p if salt is None else (salt << 21) | p
+
+    def snapshot(zoom: int, parent: np.ndarray) -> pd.DataFrame:
+        if kdbush:
+            from arrow_supercluster_spark.functions.kdbush_order import (
+                kdbush_visit_rank,
+            )
+
+            pos = kdbush_visit_rank(x, y)
+        else:
+            pos = np.arange(len(x), dtype=np.int64)
+        return pd.DataFrame(
+            {
+                "zoom": np.int32(zoom),
+                "cluster_id": ids,
+                "x": x,
+                "y": y,
+                "parent_id": parent,
+                "num_points": nump,
+                "pos": salted(pos),
+            }
+        )
+
+    out = []
+    for z in range(z_hi, opts.min_zoom - 1, -1):
+        gidx = salted(np.arange(len(x), dtype=np.int64))
+        parent, _, nids, nx, ny, nnum = _scan_zoom_np(
+            x, y, gidx, ids, nump, z, opts, total
+        )
+        # the consumed level (z+1), now that its parent pointers are final
+        out.append(snapshot(z + 1, parent))
+        x, y, ids, nump = nx, ny, nids, nnum
+    final_zoom = min(opts.min_zoom, opts.leaf_zoom)
+    out.append(snapshot(final_zoom, np.full(len(x), -1, dtype=np.int64)))
+    return pd.concat(out[::-1], ignore_index=True)
 
 
 def greedy_cluster_kernel(
@@ -113,177 +285,66 @@ def greedy_cluster_kernel(
     key) is packed into the high bits: cid = ((salt<<21 | index) << 5) +
     (zoom+1) + total — globally unique, still decodes zoom the
     reference's way. Requires salt < 2^33 and < 2^21 items per group.
+    `pos` is salted the same way: each kernel ranks only its own group's
+    items, so cross-group order is group-major (exact single-group mode
+    is the reference-faithful parity oracle).
 
     pos_order: "kdbush" (default) stores each row's KDBush within()-visit
     rank as `pos` — the reference's child-enumeration order at any level
-    size; "insertion" stores the plain level-array index (identical on
-    levels ≤ 64; the convention mode="cc" reproduces distributively).
+    size, which drives getChildren ordering and DFS getLeaves pagination
+    (greedy_nav); "insertion" stores the plain level-array index
+    (identical on levels ≤ 64; the convention mode="cc" reproduces
+    distributively).
     """
     if group_salt is not None and not (0 <= group_salt < (1 << 33)):
         raise ValueError(f"group_salt out of range: {group_salt}")
     if pos_order not in ("kdbush", "insertion"):
         raise ValueError(f"unknown pos_order: {pos_order}")
+    level = pd.DataFrame(
+        {
+            "cluster_id": np.asarray(ids0, dtype=np.int64),
+            "x": np.asarray(x0, dtype=np.float64),
+            "y": np.asarray(y0, dtype=np.float64),
+            "num_points": np.ones(len(x0), dtype=np.int64),
+        }
+    )
+    return _scan_levels(
+        level,
+        opts.max_zoom,
+        opts,
+        total_points if total_points is not None else len(x0),
+        salt=group_salt,
+        kdbush=pos_order == "kdbush",
+    )
 
-    def mk_pos(lx: np.ndarray, ly: np.ndarray) -> np.ndarray:
-        """Row's KDBush visit rank within its level array — the order the
-        reference's within() yields children at ANY level size
-        (functions/kdbush_order.py: kd-sort + mid-right-left traversal of
-        the per-level Float32 tree, arrow-cluster-engine.ts:291-302,418-426;
-        identical to insertion order on levels ≤ nodeSize=64).  Drives
-        getChildren ordering and DFS getLeaves pagination (greedy_nav).
-        Salted like cluster ids in partitioned mode — there each kernel
-        ranks only its own group's items, so cross-group order is
-        documented as group-major (exact single-group mode is the
-        reference-faithful parity oracle)."""
-        if pos_order == "kdbush":
-            from arrow_supercluster_spark.functions.kdbush_order import (
-                kdbush_visit_rank,
-            )
 
-            p = kdbush_visit_rank(lx, ly)
-        else:
-            p = np.arange(len(lx), dtype=np.int64)
-        return p if group_salt is None else (group_salt << 21) | p
-    n = len(x0)
-    total = total_points if total_points is not None else n
-    # level arrays (AoS equivalent, kept as parallel numpy arrays)
-    x = x0.astype(np.float64).copy()
-    y = y0.astype(np.float64).copy()
-    ids = ids0.astype(np.int64).copy()
-    parent = np.full(n, -1, dtype=np.int64)
-    nump = np.ones(n, dtype=np.int64)
-    visited = np.full(n, np.inf)  # zoom at which item was consumed
+def _id_space(points) -> int:
+    """The cluster-id salt: the reference encodes this.numPoints =
+    table.numRows BEFORE the null/mask filtering
+    (arrow-cluster-engine.ts:64,378), so ids must be salted with the
+    PRE-drop row count or they diverge from reference-produced ids on
+    inputs containing null geometry. Callers applying a filter mask do so
+    AFTER this count — rows the reference would count (masked rows
+    included) must still be present in `points` here. One 1-row agg."""
+    from pyspark.sql import functions as F
 
-    levels: dict[int, pd.DataFrame] = {}
-    leaf_zoom = opts.leaf_zoom
+    total, max_id = points.agg(F.count(F.lit(1)), F.max("id")).collect()[0]
+    # Packed cluster ids live at (idx<<5)+(z+1)+total, i.e. strictly
+    # above total; a USER point id >= total CAN collide with one of them,
+    # making drill-down by id ambiguous (the reference can't hit this —
+    # its ids are table row indices by construction; the clustering
+    # itself stays correct either way). Surface it loudly.
+    if max_id is not None and max_id >= total:
+        import warnings
 
-    for z in range(opts.max_zoom, opts.min_zoom - 1, -1):
-        r = opts.radius / (opts.extent * (2.0**z))
-        r2 = r * r
-        m = len(x)
-        bins, bcx, bcy = _neighbors_within(x, y, r)
-
-        nx: list[float] = []
-        ny: list[float] = []
-        nids: list[int] = []
-        nnum: list[int] = []
-
-        # one concatenated 3×3-neighborhood candidate array per occupied
-        # cell (shared by all points in the cell) — keeps the greedy scan
-        # itself O(n) with vectorized distance checks
-        hood_cache: dict[tuple[int, int], np.ndarray] = {}
-
-        def hood(cell: tuple[int, int]) -> np.ndarray:
-            got = hood_cache.get(cell)
-            if got is None:
-                parts = [
-                    bins[c]
-                    for c in (
-                        (cell[0] + dxc, cell[1] + dyc)
-                        for dxc in (-1, 0, 1)
-                        for dyc in (-1, 0, 1)
-                    )
-                    if c in bins
-                ]
-                got = np.concatenate(parts) if parts else np.empty(0, dtype=np.int64)
-                hood_cache[cell] = got
-            return got
-
-        for i in range(m):
-            if visited[i] <= z:
-                continue
-            visited[i] = z
-
-            xi, yi = x[i], y[i]
-            cand = hood((bcx[i], bcy[i]))
-            dx = x[cand] - xi
-            dy = y[cand] - yi
-            neigh = cand[(dx * dx + dy * dy <= r2) & (cand != i)]
-
-            n_origin = nump[i]
-            n_total = n_origin
-            for k in neigh:
-                if visited[k] > z:
-                    n_total += nump[k]
-
-            if n_total > n_origin and n_total >= opts.min_points:
-                wx = xi * n_origin
-                wy = yi * n_origin
-                origin_key = i if group_salt is None else (group_salt << 21) | i
-                cid = (origin_key << 5) + (z + 1) + total
-                for k in neigh:
-                    if visited[k] <= z:
-                        continue
-                    visited[k] = z
-                    wx += x[k] * nump[k]
-                    wy += y[k] * nump[k]
-                    parent[k] = cid
-                parent[i] = cid
-                nx.append(wx / n_total)
-                ny.append(wy / n_total)
-                nids.append(cid)
-                nnum.append(int(n_total))
-            else:
-                nx.append(xi)
-                ny.append(yi)
-                nids.append(int(ids[i]))
-                nnum.append(int(nump[i]))
-                if n_total > 1:
-                    for k in neigh:
-                        if visited[k] <= z:
-                            continue
-                        visited[k] = z
-                        nx.append(x[k])
-                        ny.append(y[k])
-                        nids.append(int(ids[k]))
-                        nnum.append(int(nump[k]))
-
-        # snapshot the CONSUMED level (z+1) now that its parent pointers
-        # are final
-        levels[z + 1] = pd.DataFrame(
-            {
-                "zoom": np.int32(z + 1),
-                "cluster_id": ids,
-                "x": x,
-                "y": y,
-                "parent_id": parent,
-                "num_points": nump,
-                "pos": mk_pos(x, y),
-            }
+        warnings.warn(
+            f"point id {max_id} >= row count {total}: packed cluster ids "
+            "may collide with point ids, making id-keyed drill-down "
+            "(get_children/get_leaves) ambiguous. Re-index ids to 0..n-1 "
+            "(row indices, the reference's id space) for drill-down use.",
+            stacklevel=3,
         )
-        x = np.asarray(nx)
-        y = np.asarray(ny)
-        ids = np.asarray(nids, dtype=np.int64)
-        nump = np.asarray(nnum, dtype=np.int64)
-        parent = np.full(len(nx), -1, dtype=np.int64)
-        visited = np.full(len(nx), np.inf)
-
-    levels[opts.min_zoom] = pd.DataFrame(
-        {
-            "zoom": np.int32(opts.min_zoom),
-            "cluster_id": ids,
-            "x": x,
-            "y": y,
-            "parent_id": parent,
-            "num_points": nump,
-            "pos": mk_pos(x, y),
-        }
-    )
-    out = pd.concat(
-        [levels[z] for z in range(opts.min_zoom, leaf_zoom + 1)],
-        ignore_index=True,
-    )
-    return out.astype(
-        {
-            "zoom": "int32",
-            "cluster_id": "int64",
-            "x": "float64",
-            "y": "float64",
-            "parent_id": "int64",
-            "num_points": "int64",
-            "pos": "int64",
-        }
-    )
+    return total
 
 
 def greedy_hierarchy(
@@ -338,31 +399,7 @@ def greedy_hierarchy(
     from arrow_supercluster_spark.operators.filters import drop_null_geometry
     from arrow_supercluster_spark.functions.projection import fround, lat_y, lng_x
 
-    # The reference encodes this.numPoints = table.numRows BEFORE the
-    # null/mask filtering (arrow-cluster-engine.ts:64,378), so cluster ids
-    # must be salted with the PRE-drop row count or they diverge from
-    # reference-produced ids on inputs containing null geometry. Callers
-    # applying a filter mask should do so via the mask contract AFTER this
-    # operator's id space is fixed — i.e. rows the reference would count
-    # (masked rows included) must still be present in `points` here.
-    total, max_id = points.agg(
-        F.count(F.lit(1)), F.max("id")
-    ).collect()[0]
-    # Packed cluster ids live at (idx<<5)+(z+1)+total, i.e. strictly
-    # above total; a USER point id >= total CAN collide with one of them,
-    # making drill-down by id ambiguous (the reference can't hit this —
-    # its ids are table row indices by construction; the clustering
-    # itself stays correct either way). Surface it loudly.
-    if max_id is not None and max_id >= total:
-        import warnings
-
-        warnings.warn(
-            f"point id {max_id} >= row count {total}: packed cluster ids "
-            "may collide with point ids, making id-keyed drill-down "
-            "(get_children/get_leaves) ambiguous. Re-index ids to 0..n-1 "
-            "(row indices, the reference's id space) for drill-down use.",
-            stacklevel=3,
-        )
+    total = _id_space(points)
     if mask is not None:
         points = points.filter(mask)  # AFTER the id-space salt is fixed
     pts = (
@@ -374,7 +411,7 @@ def greedy_hierarchy(
         )
     )
 
-    def run_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def run_group(key, pdf):
         pdf = pdf.sort_values("id", kind="mergesort")  # insertion order
         return greedy_cluster_kernel(
             pdf["x"].to_numpy(),
@@ -417,110 +454,26 @@ _CC_SCHEMA = (
 
 
 def _scan_one_zoom(pdf: pd.DataFrame, z: int, opts: ClusterOptions, total: int) -> pd.DataFrame:
-    """One zoom level of the sequential greedy scan over ONE dependency
-    component, bit-faithful to the inner loop of `greedy_cluster_kernel`
-    (same hood construction order, same neighbor iteration order, same
-    float accumulation order). `idx` is the item's GLOBAL level-array
-    index: processing the component's points in ascending `idx` equals
-    the global scan restricted to the component, and cluster ids encode
-    `idx` exactly as the reference encodes the level index
-    (arrow-cluster-engine.ts:378)."""
+    """`_scan_zoom_np` over ONE dependency component of mode="cc" at zoom
+    z. `idx` is the item's GLOBAL level index: scanning the component in
+    ascending `idx` equals the global scan restricted to it, and cluster
+    ids encode `idx` as the reference encodes the level index
+    (arrow-cluster-engine.ts:378). Returns the _CC_SCHEMA union: the
+    consumed rows (kind 0, pos = idx) and the next-level items (kind 1)
+    keyed for the global re-rank by e0 = idx of the item that emitted
+    them and e1 = their emission rank under it."""
     pdf = pdf.sort_values("idx", kind="mergesort")
     x = pdf["x"].to_numpy(dtype=np.float64)
     y = pdf["y"].to_numpy(dtype=np.float64)
     gidx = pdf["idx"].to_numpy(dtype=np.int64)
     ids = pdf["cluster_id"].to_numpy(dtype=np.int64)
     nump = pdf["num_points"].to_numpy(dtype=np.int64)
-    m = len(x)
-    r = opts.radius / (opts.extent * (2.0**z))
-    r2 = r * r
-    bins, bcx, bcy = _neighbors_within(x, y, r)
-
-    hood_cache: dict[tuple[int, int], np.ndarray] = {}
-
-    def hood(cell: tuple[int, int]) -> np.ndarray:
-        got = hood_cache.get(cell)
-        if got is None:
-            parts = [
-                bins[c]
-                for c in (
-                    (cell[0] + dxc, cell[1] + dyc)
-                    for dxc in (-1, 0, 1)
-                    for dyc in (-1, 0, 1)
-                )
-                if c in bins
-            ]
-            got = np.concatenate(parts) if parts else np.empty(0, dtype=np.int64)
-            hood_cache[cell] = got
-        return got
-
-    visited = np.zeros(m, dtype=bool)
-    parent = np.full(m, -1, dtype=np.int64)
-    it_e0: list[int] = []
-    it_e1: list[int] = []
-    it_id: list[int] = []
-    it_x: list[float] = []
-    it_y: list[float] = []
-    it_n: list[int] = []
-
-    for i in range(m):
-        if visited[i]:
-            continue
-        visited[i] = True
-        xi, yi = x[i], y[i]
-        cand = hood((bcx[i], bcy[i]))
-        dx = x[cand] - xi
-        dy = y[cand] - yi
-        neigh = cand[(dx * dx + dy * dy <= r2) & (cand != i)]
-
-        n_origin = nump[i]
-        n_total = n_origin
-        for k in neigh:
-            if not visited[k]:
-                n_total += nump[k]
-
-        if n_total > n_origin and n_total >= opts.min_points:
-            wx = xi * n_origin
-            wy = yi * n_origin
-            cid = (int(gidx[i]) << 5) + (z + 1) + total
-            for k in neigh:
-                if visited[k]:
-                    continue
-                visited[k] = True
-                wx += x[k] * nump[k]
-                wy += y[k] * nump[k]
-                parent[k] = cid
-            parent[i] = cid
-            it_e0.append(int(gidx[i]))
-            it_e1.append(0)
-            it_id.append(cid)
-            it_x.append(wx / n_total)
-            it_y.append(wy / n_total)
-            it_n.append(int(n_total))
-        else:
-            it_e0.append(int(gidx[i]))
-            it_e1.append(0)
-            it_id.append(int(ids[i]))
-            it_x.append(xi)
-            it_y.append(yi)
-            it_n.append(int(nump[i]))
-            if n_total > 1:
-                sub = 1
-                for k in neigh:
-                    if visited[k]:
-                        continue
-                    visited[k] = True
-                    it_e0.append(int(gidx[i]))
-                    it_e1.append(sub)
-                    it_id.append(int(ids[k]))
-                    it_x.append(x[k])
-                    it_y.append(y[k])
-                    it_n.append(int(nump[k]))
-                    sub += 1
-
+    parent, src, out_id, out_x, out_y, out_n = _scan_zoom_np(
+        x, y, gidx, ids, nump, z, opts, total
+    )
     consumed = pd.DataFrame(
         {
-            "kind": 0,
+            "kind": np.int32(0),
             "zoom": np.int32(z + 1),
             "cluster_id": ids,
             "x": x,
@@ -532,44 +485,22 @@ def _scan_one_zoom(pdf: pd.DataFrame, z: int, opts: ClusterOptions, total: int) 
             "e1": np.int64(0),
         }
     )
+    # emission order already is (e0, e1) order: src is nondecreasing
     items = pd.DataFrame(
         {
-            "kind": 1,
+            "kind": np.int32(1),
             "zoom": np.int32(0),
-            "cluster_id": np.asarray(it_id, dtype=np.int64),
-            "x": np.asarray(it_x, dtype=np.float64),
-            "y": np.asarray(it_y, dtype=np.float64),
+            "cluster_id": out_id,
+            "x": out_x,
+            "y": out_y,
             "parent_id": np.int64(-1),
-            "num_points": np.asarray(it_n, dtype=np.int64),
+            "num_points": out_n,
             "pos": np.int64(0),
-            "e0": np.asarray(it_e0, dtype=np.int64),
-            "e1": np.asarray(it_e1, dtype=np.int64),
+            "e0": gidx[src],
+            "e1": np.arange(len(src), dtype=np.int64) - np.searchsorted(src, src),
         }
     )
-    out = pd.concat([consumed, items], ignore_index=True)
-    return out.astype(
-        {
-            "kind": "int32",
-            "zoom": "int32",
-            "cluster_id": "int64",
-            "x": "float64",
-            "y": "float64",
-            "parent_id": "int64",
-            "num_points": "int64",
-            "pos": "int64",
-            "e0": "int64",
-            "e1": "int64",
-        }
-    )
-
-
-def _zip_rank(df, sort_cols: list, out: str = "idx"):
-    """Global dense 0-based rank by `sort_cols` WITHOUT a single-partition
-    window — delegates to the generalized functions/distrank.py zip_scan
-    (promoted from here in round 4 so registry entries can share it)."""
-    from arrow_supercluster_spark.functions.distrank import zip_scan
-
-    return zip_scan(df, sort_cols, out=out)[0]
+    return pd.concat([consumed, items], ignore_index=True)
 
 
 # Adaptive bound shared with operators/dedup.connected_components_adaptive:
@@ -582,8 +513,8 @@ _CC_EDGE_CAP = 200_000
 # levels identity when nothing is within reach (r doubles per level).
 _CC_LOOKAHEAD = 3
 # Once the LEVEL table itself fits under this row cap, the remaining
-# zooms run entirely on the driver with the same `_scan_one_zoom` kernel
-# (zero Spark jobs) — levels shrink monotonically, so on any corpus the
+# zooms run entirely on the driver in `_scan_levels`, the exact kernel's
+# own loop (zero Spark jobs) — levels shrink monotonically, so on any corpus the
 # coarse-zoom tail eventually crosses this bound. Same adaptive design
 # (and honesty contract: bit-identical, fallback-tested) as
 # connected_components_adaptive.
@@ -678,6 +609,22 @@ def _rank_step_fn(comp_nodes: np.ndarray, key_e0: np.ndarray):
     return nodes_sorted, cum_pad
 
 
+def _level_rows(level, zoom: int):
+    """A level's items, unchanged, as RESULT_SCHEMA rows at `zoom`: no
+    parent, pos = the level index."""
+    from pyspark.sql import functions as F
+
+    return level.select(
+        F.lit(zoom).cast("int").alias("zoom"),
+        "cluster_id",
+        "x",
+        "y",
+        F.lit(-1).cast("long").alias("parent_id"),
+        "num_points",
+        F.col("idx").alias("pos"),
+    )
+
+
 def greedy_hierarchy_cc(points, opts: ClusterOptions = DEFAULT_OPTIONS, mask=None):
     """Exact distributed greedy hierarchy (mode="cc" of greedy_hierarchy;
     see module docstring for why components are the exact dependency
@@ -685,27 +632,15 @@ def greedy_hierarchy_cc(points, opts: ClusterOptions = DEFAULT_OPTIONS, mask=Non
     from pyspark.sql import functions as F
 
     from arrow_supercluster_spark.functions.checkpoint import truncate
+    from arrow_supercluster_spark.functions.distrank import zip_scan
     from arrow_supercluster_spark.functions.projection import fround, lat_y, lng_x
+    from arrow_supercluster_spark.functions.small_side import small_side
     from arrow_supercluster_spark.operators.dedup import (
         connected_components_adaptive,
     )
     from arrow_supercluster_spark.operators.filters import drop_null_geometry
 
-    import functools
-
-    # pre-drop, pre-mask: the reference id salt; same id<total guard as
-    # greedy_hierarchy (packed ids live above total)
-    total, max_id = points.agg(
-        F.count(F.lit(1)), F.max("id")
-    ).collect()[0]
-    if max_id is not None and max_id >= total:
-        import warnings
-
-        warnings.warn(
-            f"point id {max_id} >= row count {total}: packed cluster ids "
-            "may collide with point ids — see greedy_hierarchy's guard.",
-            stacklevel=3,
-        )
+    total = _id_space(points)  # pre-drop, pre-mask: the reference id salt
     if mask is not None:
         points = points.filter(mask)
     pts = drop_null_geometry(points).select(
@@ -713,8 +648,6 @@ def greedy_hierarchy_cc(points, opts: ClusterOptions = DEFAULT_OPTIONS, mask=Non
         fround(lng_x(F.col("lng"))).alias("x"),
         fround(lat_y(F.col("lat"))).alias("y"),
     )
-    from arrow_supercluster_spark.functions.distrank import zip_scan
-
     cur, n_cur, _ = zip_scan(
         pts.withColumn("num_points", F.lit(1).cast("long")), ["cluster_id"]
     )
@@ -728,76 +661,18 @@ def greedy_hierarchy_cc(points, opts: ClusterOptions = DEFAULT_OPTIONS, mask=Non
         n_parts = spark_s.sparkContext.defaultParallelism
     out_parts = []
 
-    def identity_level(z: int) -> None:
-        out_parts.append(
-            cur.select(
-                F.lit(z + 1).cast("int").alias("zoom"),
-                "cluster_id",
-                "x",
-                "y",
-                F.lit(-1).cast("long").alias("parent_id"),
-                "num_points",
-                F.col("idx").alias("pos"),
-            )
-        )
-
     # levels with r² strictly below this are provably identity (no pair
     # closer than the horizon exists) — set by the lookahead probe below
     skip_until_r2: float | None = None
-    finished_locally = False
+    z_tail = None  # first zoom left to the driver tail
     for z in range(opts.max_zoom, opts.min_zoom - 1, -1):
         if n_cur is not None and n_cur <= _CC_DRIVER_LEVEL_CAP:
-            # driver tail (round-4 cost pass): the whole level fits —
-            # run every remaining zoom with the exact kernel locally
-            # (_scan_one_zoom over the full level IS the sequential
-            # one-zoom scan; dense re-rank = lexsort by (e0, e1)), ship
-            # the result back in one createDataFrame. Zero jobs/level.
-            lvl = (
-                cur.toPandas()
-                .sort_values("idx", kind="mergesort")
-                .reset_index(drop=True)
-            )
-            local_out = []
-            for zz in range(z, opts.min_zoom - 1, -1):
-                resl = _scan_one_zoom(lvl, z=zz, opts=opts, total=total)
-                local_out.append(
-                    resl[resl["kind"] == 0][
-                        ["zoom", "cluster_id", "x", "y",
-                         "parent_id", "num_points", "pos"]
-                    ]
-                )
-                items = resl[resl["kind"] == 1]
-                order = np.lexsort(
-                    (items["e1"].to_numpy(), items["e0"].to_numpy())
-                )
-                items = items.iloc[order].reset_index(drop=True)
-                lvl = items[
-                    ["cluster_id", "x", "y", "num_points"]
-                ].copy()
-                lvl.insert(0, "idx", np.arange(len(items), dtype=np.int64))
-            final = lvl[["cluster_id", "x", "y", "num_points"]].copy()
-            final.insert(0, "zoom", np.int32(opts.min_zoom))
-            final["parent_id"] = np.int64(-1)
-            final["pos"] = lvl["idx"].to_numpy()
-            local_out.append(
-                final[
-                    ["zoom", "cluster_id", "x", "y",
-                     "parent_id", "num_points", "pos"]
-                ]
-            )
-            out_parts.append(
-                spark_s.createDataFrame(
-                    pd.concat(local_out, ignore_index=True),
-                    "zoom int, cluster_id long, x double, y double, "
-                    "parent_id long, num_points long, pos long",
-                )
-            )
-            finished_locally = True
+            z_tail = z
             break
         r = opts.radius / (opts.extent * (2.0**z))
         r2 = r * r
         if skip_until_r2 is not None and r2 < skip_until_r2:
-            identity_level(z)
+            out_parts.append(_level_rows(cur, z + 1))
             continue
         # LOOKAHEAD probe (round-4 cost pass): bin at R = r·2^k and
         # collect candidate pairs with their d² up to R — one evaluation
@@ -808,19 +683,14 @@ def greedy_hierarchy_cc(points, opts: ClusterOptions = DEFAULT_OPTIONS, mask=Non
         # probe degrades to exactly the per-level collect it replaces.
         z_eff = max(z - _CC_LOOKAHEAD, 0)
         bigr = opts.radius / (opts.extent * (2.0**z_eff))
-        e_pd = (
-            _cc_edge_plan(cur, bigr)
-            .limit(_CC_EDGE_CAP + 1)
-            .toPandas()
-        )
-        if len(e_pd) > _CC_EDGE_CAP and z_eff != z:
+        e_tbl = small_side(_cc_edge_plan(cur, bigr), _CC_EDGE_CAP)
+        if e_tbl is None and z_eff != z:
             # lookahead net too wide for the cap — retry at the exact
             # level radius before falling back to the distributed path
-            e_pd = (
-                _cc_edge_plan(cur, r).limit(_CC_EDGE_CAP + 1).toPandas()
-            )
+            e_tbl = small_side(_cc_edge_plan(cur, r), _CC_EDGE_CAP)
             bigr = r
-        if len(e_pd) <= _CC_EDGE_CAP:
+        if e_tbl is not None:
+            e_pd = e_tbl.to_pandas()
             e_sub = e_pd[e_pd["d2"].to_numpy() <= r2]
             if len(e_sub) == 0:
                 # identity level — and the collected d² set bounds how
@@ -831,7 +701,7 @@ def greedy_hierarchy_cc(points, opts: ClusterOptions = DEFAULT_OPTIONS, mask=Non
                     if len(e_pd)
                     else float(np.nextafter(bigr * bigr, np.inf))
                 )
-                identity_level(z)
+                out_parts.append(_level_rows(cur, z + 1))
                 continue
             skip_until_r2 = None
             e_pd = e_sub
@@ -860,22 +730,17 @@ def greedy_hierarchy_cc(points, opts: ClusterOptions = DEFAULT_OPTIONS, mask=Non
             ]
             local = pd.concat(scans, ignore_index=True)
             is_item = local["kind"].to_numpy() == 1
+            e0 = local["e0"].to_numpy(dtype="int64")
             nodes_sorted, cum_pad = _rank_step_fn(
-                mem["idx"].to_numpy(),
-                local["e0"].to_numpy(dtype="int64")[is_item],
+                mem["idx"].to_numpy(), e0[is_item]
             )
             # closed-form dense re-rank (see _rank_step_fn): local items
             # get idx in numpy here; the distributed iso rows (e1 = 0)
             # get idx' = idx + D(idx) in the narrow Arrow map below
-            local = local.copy()
             local["idx"] = np.where(
                 is_item,
-                local["e0"].to_numpy(dtype="int64")
-                + cum_pad[
-                    np.searchsorted(
-                        nodes_sorted, local["e0"].to_numpy(dtype="int64")
-                    )
-                ]
+                e0
+                + cum_pad[np.searchsorted(nodes_sorted, e0)]
                 + local["e1"].to_numpy(dtype="int64"),
                 0,
             )
@@ -902,15 +767,7 @@ def greedy_hierarchy_cc(points, opts: ClusterOptions = DEFAULT_OPTIONS, mask=Non
                 nodes_df, cur["idx"] == nodes_df["node_id"], "left_anti"
             )
             out_parts.append(
-                iso.select(
-                    F.lit(z + 1).cast("int").alias("zoom"),
-                    "cluster_id",
-                    "x",
-                    "y",
-                    F.lit(-1).cast("long").alias("parent_id"),
-                    "num_points",
-                    F.col("idx").alias("pos"),
-                ).unionByName(
+                _level_rows(iso, z + 1).unionByName(
                     local_df.filter(F.col("kind") == 0).select(
                         "zoom", "cluster_id", "x", "y",
                         "parent_id", "num_points", "pos",
@@ -969,15 +826,9 @@ def greedy_hierarchy_cc(points, opts: ClusterOptions = DEFAULT_OPTIONS, mask=Non
             # rows: narrow projections, never shuffled into the scan —
             # at fine zooms the vast majority of the corpus
             iso = lab.filter(F.col("comp").isNull())
-            iso_consumed = iso.select(
+            iso_consumed = _level_rows(iso, z + 1).select(
                 F.lit(0).cast("int").alias("kind"),
-                F.lit(z + 1).cast("int").alias("zoom"),
-                "cluster_id",
-                "x",
-                "y",
-                F.lit(-1).cast("long").alias("parent_id"),
-                "num_points",
-                F.col("idx").alias("pos"),
+                "*",
                 F.lit(0).cast("long").alias("e0"),
                 F.lit(0).cast("long").alias("e1"),
             )
@@ -993,15 +844,16 @@ def greedy_hierarchy_cc(points, opts: ClusterOptions = DEFAULT_OPTIONS, mask=Non
                 F.col("idx").alias("e0"),
                 F.lit(0).cast("long").alias("e1"),
             )
+
+            # one positional parameter: applyInPandas passes the group
+            # alone; the keyword default binds this level's zoom
+            def scan_component(pdf, *, _z=z):
+                return _scan_one_zoom(pdf, _z, opts, total)
+
             scan = (
                 lab.filter(F.col("comp").isNotNull())
                 .groupBy("comp")
-                .applyInPandas(
-                    functools.partial(
-                        _scan_one_zoom, z=z, opts=opts, total=total
-                    ),
-                    schema=_CC_SCHEMA,
-                )
+                .applyInPandas(scan_component, schema=_CC_SCHEMA)
             )
             res = truncate(
                 scan.unionByName(iso_consumed)
@@ -1024,18 +876,17 @@ def greedy_hierarchy_cc(points, opts: ClusterOptions = DEFAULT_OPTIONS, mask=Non
                 ranked.select("idx", "cluster_id", "x", "y", "num_points")
             )
 
-    if not finished_locally:
+    if z_tail is not None:
+        # driver tail: the whole level fits — every remaining zoom runs in
+        # `_scan_levels` and comes back in one createDataFrame
+        lvl = cur.toPandas().sort_values("idx", kind="mergesort")
         out_parts.append(
-            cur.select(
-                F.lit(opts.min_zoom).cast("int").alias("zoom"),
-                "cluster_id",
-                "x",
-                "y",
-                F.lit(-1).cast("long").alias("parent_id"),
-                "num_points",
-                F.col("idx").alias("pos"),
+            spark_s.createDataFrame(
+                _scan_levels(lvl, z_tail, opts, total), RESULT_SCHEMA
             )
         )
+    else:
+        out_parts.append(_level_rows(cur, min(opts.min_zoom, opts.leaf_zoom)))
     out = out_parts[0]
     for p in out_parts[1:]:
         out = out.unionByName(p)

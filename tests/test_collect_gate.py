@@ -55,12 +55,14 @@ ALLOWLIST: dict[str, str] = {
         "limit(cap + 1): at most cap + 1 rows per call, one job (the "
         "callers' literal caps: connected_components_adaptive's 200k "
         "edges, the radius hierarchy's _DRIVER_LEVEL_CAP, pagerank's "
-        "_DRIVER_EDGE_CAP of 2M edges)",
-    "operators/greedy.py::greedy_hierarchy":
+        "_DRIVER_EDGE_CAP of 2M edges, greedy cc's _CC_EDGE_CAP of 200k "
+        "candidate edges per lookahead probe, triangle_counts' "
+        "_TRI_BITSET_MAX_NODES of 16384 distinct nodes)",
+    "operators/greedy.py::_id_space":
         "1-row (count, max_id) agg fixing the cluster-id space",
     "operators/greedy.py::greedy_hierarchy_cc":
-        "1-row aggs (count/max_id/level stats); per-level loop bounded "
-        "by zoom depth (<= 17 levels)",
+        "driver tail: one toPandas of the level, taken only once it has "
+        "<= _CC_DRIVER_LEVEL_CAP = 150k items",
     "operators/hull.py::convex_hull":
         "per-group Andrew-monotone input is the group's points AFTER the "
         "documented per-group cap; hull output <= input",
@@ -72,9 +74,6 @@ ALLOWLIST: dict[str, str] = {
     "operators/similarity.py::cosine_topk_gemm":
         "collects the QUERY side only (broadcast contract, same bound as "
         "cosine_topk's F.broadcast); corpus side stays distributed",
-    "operators/graph.py::triangle_counts":
-        "dispatch probe: distinct().limit(_TRI_BITSET_MAX_NODES+1) — "
-        "16385 rows max regardless of graph size",
     "operators/graph.py::_triangle_counts_bitset":
         "adjacency bitmap table: <= _TRI_BITSET_MAX_NODES rows by "
         "dispatch (the broadcast it feeds)",

@@ -7,16 +7,10 @@ path (linear-scan neighbors, plain lists) so binning bugs in the kernel
 can't self-confirm.
 """
 
-# Timing tier (r11, VERDICT r10 "Next round" #2): this module's Spark
-# work put it above the 8 s cut in the measured full-suite profile, so it
-# is excluded from the DEFAULT pytest run (pyproject addopts -m 'not
-# slow') to keep that run inside the driver's budget.  The full suite
-# (tools/shard_tests.py, or pytest -m '') still runs it.
-import pytest as _pytest_tier
-
-pytestmark = _pytest_tier.mark.slow
-
-
+# Timing tier: the kernel-vs-oracle tests need no Spark and run in the
+# DEFAULT pytest run; the three Spark operator tests are marked `slow`
+# (pyproject addopts -m 'not slow') and run in the full suite
+# (tools/shard_tests.py, or pytest -m '').
 import math
 
 import numpy as np
@@ -110,9 +104,11 @@ def naive_greedy(x, y, ids, opts: ClusterOptions, total=None):
                         nxt.append(dict(o, visited=math.inf, parent=-1))
         levels[z + 1] = [dict(it) for it in items]
         items = nxt
-    levels[opts.min_zoom] = [dict(it) for it in items]
+    # with max_zoom < min_zoom no zoom runs: the leaf level alone
+    final_zoom = min(opts.min_zoom, opts.leaf_zoom)
+    levels[final_zoom] = [dict(it) for it in items]
     rows = []
-    for z in range(opts.min_zoom, opts.leaf_zoom + 1):
+    for z in range(final_zoom, opts.leaf_zoom + 1):
         for it in levels[z]:
             rows.append((z, it["id"], it["x"], it["y"], it["parent"], it["num"]))
     return pd.DataFrame(
@@ -209,8 +205,35 @@ def test_two_far_points_never_cluster():
     assert (out.num_points == 1).all()
 
 
+@pytest.mark.parametrize(
+    "opts",
+    [
+        ClusterOptions(min_points=5),
+        ClusterOptions(min_zoom=3, max_zoom=2),
+        ClusterOptions(min_zoom=4, max_zoom=2),
+    ],
+    ids=["min_points5", "zoom3_2", "zoom4_2"],
+)
+def test_kernel_matches_naive_across_options(opts):
+    """min_points=5 exercises the passthrough branch (neighbors seen but
+    too few to cluster). max_zoom < min_zoom scans no zoom: the hierarchy
+    is the leaf level alone at leaf_zoom, as radius_hierarchy returns it.
+    Rows are compared as sets per zoom: the oracle emits passed-through
+    neighbors in index order, the kernel in grid-neighborhood order."""
+    x, y, ids = project(lcg_points(60))
+    cols = ["zoom", "cluster_id", "parent_id", "num_points", "x", "y"]
+    kern = greedy_cluster_kernel(x, y, ids, opts)[cols]
+    naive = naive_greedy(x, y, ids, opts)[cols]
+    first = min(opts.min_zoom, opts.leaf_zoom)
+    assert set(kern.zoom) == set(range(first, opts.leaf_zoom + 1))
+    assert sorted(map(tuple, kern.to_numpy().tolist())) == sorted(
+        map(tuple, naive.to_numpy().tolist())
+    )
+
+
 # Spark operator wrapper
 
+@pytest.mark.slow
 def test_spark_exact_matches_kernel(spark):
     pts = lcg_points(300)
     df = spark.createDataFrame(
@@ -227,6 +250,7 @@ def test_spark_exact_matches_kernel(spark):
     np.testing.assert_allclose(g.x, w.x, atol=1e-9)
 
 
+@pytest.mark.slow
 def test_spark_partitioned_conserves_counts(spark):
     pts = lcg_points(400)
     df = spark.createDataFrame(
@@ -246,6 +270,7 @@ def test_spark_partitioned_conserves_counts(spark):
     pd.testing.assert_frame_equal(a, b)
 
 
+@pytest.mark.slow
 def test_mask_preserves_id_space(spark):
     """filterMask semantics (arrow-cluster-engine.ts:62,79,378): masked
     rows never enter the index but still count toward table.numRows —

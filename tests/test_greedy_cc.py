@@ -148,3 +148,14 @@ def test_cc_zigzag_proximity_chain_end_to_end(spark, nparts):
     exact = _norm(greedy_hierarchy(pts, OPTS, mode="exact", pos_order="insertion"))
     got = _norm(greedy_hierarchy(pts.repartition(nparts), OPTS, mode="cc"))
     pd.testing.assert_frame_equal(got, exact, check_exact=True)
+
+
+def test_cc_degenerate_zoom_range(spark):
+    """max_zoom < min_zoom: cc returns the same leaf-only hierarchy as
+    mode='exact', labelled leaf_zoom (3), not min_zoom (4)."""
+    opts = ClusterOptions(min_zoom=4, max_zoom=2)
+    pts = spark.createDataFrame(lcg_points(120), "id long, lng double, lat double")
+    exact = _norm(greedy_hierarchy(pts, opts, mode="exact", pos_order="insertion"))
+    got = _norm(greedy_hierarchy(pts.repartition(3), opts, mode="cc"))
+    pd.testing.assert_frame_equal(got, exact, check_exact=True)
+    assert len(exact) == 120 and (exact["zoom"] == opts.leaf_zoom).all()
