@@ -4,13 +4,25 @@ instance (SURVEY.md §3.3).
 Mirrors the reference's public API surface
 (packages/arrow-supercluster/src/arrow-cluster-engine.ts:14-19; README API
 section): `load`, `get_clusters`, `get_children`, `get_leaves`,
-`get_cluster_expansion_zoom`, `indexed_point_count` — re-expressed over a
-persisted per-zoom node DataFrame instead of per-zoom KDBush trees.
+`get_cluster_expansion_zoom`, `indexed_point_count`.
+
+Two tiers answer the reads. The node table is a zoom-partitioned parquet
+table under the workdir, the durable state `load()` and `append()` write.
+On top of it sits a resident pyramid, the analog of the reference's
+per-zoom KDBush trees (arrow-cluster-engine.ts:103-112, 151-156): every
+zoom from `min_zoom` down to the deepest one whose running node count fits
+`_RESIDENT_NODE_CAP`, finalized by Spark and held on the driver as one
+Arrow table sorted by (zoom, cell_x, cell_y). A coarse zoom never has more
+nodes than occupied cells, so the top of the pyramid fits whatever the
+corpus size. The first read builds it (at most 3 jobs); `load()`,
+`append()` and `unload()` drop it. `get_clusters`, `get_children` and the
+expansion-zoom walk at resident zooms are slices and `searchsorted` over
+that table and run no Spark job; deeper zooms and `get_leaves` read the
+node table and the points, partition-pruned on zoom.
 
 Caching/invalidation follows the layer's rules
 (arrow-cluster-layer.ts:46-55,84-118): rebuild only when data/options
-change (load() is the rebuild), re-query per call; the node table is
-persisted and partitioned by zoom so each query prunes 17/18 levels.
+change (load() is the rebuild), re-query per call.
 
 Cluster identity: grid nodes are identified by (zoom, cell_x, cell_y);
 the reference's (origin<<5)+zoom+count bit packing is carried by the
@@ -20,15 +32,75 @@ Q5 (q_clusterid_roundtrip).
 
 from __future__ import annotations
 
+import logging
 from typing import Optional
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.window import Window
 
 from arrow_supercluster_spark.config import DEFAULT_OPTIONS, ClusterOptions
+from arrow_supercluster_spark.functions.small_side import small_side
 from arrow_supercluster_spark.operators import grid_cluster as gc
-from arrow_supercluster_spark.operators.filters import bbox_predicate
+from arrow_supercluster_spark.operators.filters import bbox_predicate, normalize_bbox
+
+log = logging.getLogger(__name__)
+
+# Node budget of the resident pyramid. A finalized node row is about 53 B
+# in Arrow (9.65 MB for 181,682 rows), so the cap holds about 53 MB.
+_RESIDENT_NODE_CAP = 1_000_000
+
+
+def _shifted(c: str, shift) -> F.Column:
+    """`c >> shift` with the shift taken from a column (F.shiftright takes
+    only a literal shift). Cells are non-negative, so this is the exact
+    ancestor cell `shift` zooms up."""
+    return F.call_function("shiftright", F.col(c), shift)
+
+
+class _Pyramid:
+    """Zooms min_zoom..`zoom` of the finalized node table on the driver,
+    sorted by (zoom, cell_x, cell_y). `starts` holds each zoom's first
+    row, and inside a zoom cell_x is sorted, so a cell_x range is two
+    `searchsorted` probes."""
+
+    def __init__(self, tbl: pa.Table, min_zoom: int, zoom: int):
+        self.min_zoom, self.zoom = min_zoom, zoom
+        self.tbl = tbl.sort_by(
+            [("zoom", "ascending"), ("cell_x", "ascending"), ("cell_y", "ascending")]
+        ).combine_chunks()
+        col = lambda c: self.tbl.column(c).to_numpy()  # noqa: E731
+        self.cx, self.cy = col("cell_x"), col("cell_y")
+        self.lng, self.lat = col("lng"), col("lat")
+        self.starts = np.searchsorted(col("zoom"), np.arange(min_zoom, zoom + 2))
+
+    def _rows(self, z: int) -> tuple[int, int]:
+        """Row range of zoom z (empty for a zoom below min_zoom)."""
+        i = z - self.min_zoom
+        return (0, 0) if i < 0 else (self.starts[i], self.starts[i + 1])
+
+    def in_bbox(self, z: int, bbox) -> np.ndarray:
+        """Rows of zoom z inside the bbox: `bbox_predicate`'s rule, an OR
+        of inclusive ranges over normalize_bbox's boxes."""
+        lo, hi = self._rows(z)
+        lng, lat = self.lng[lo:hi], self.lat[lo:hi]
+        keep = np.zeros(hi - lo, dtype=bool)
+        for a, b, c, d in normalize_bbox(*bbox):
+            keep |= (lng >= a) & (lng <= c) & (lat >= b) & (lat <= d)
+        return lo + np.flatnonzero(keep)
+
+    def under(self, z: int, x: int, y: int, d: int) -> np.ndarray:
+        """Rows of zoom z whose cell `d` zooms up is (x, y)."""
+        lo, hi = self._rows(z)
+        a, b = lo + np.searchsorted(self.cx[lo:hi], [x << d, (x + 1) << d])
+        return a + np.flatnonzero(self.cy[a:b] >> d == y)
+
+    def frame(self, spark: SparkSession, rows: np.ndarray) -> DataFrame:
+        """The rows as a local DataFrame: its collect() runs no job."""
+        return spark.createDataFrame(self.tbl.take(rows))
 
 
 class ArrowClusterEngine:
@@ -48,6 +120,7 @@ class ArrowClusterEngine:
         self._nodes: Optional[DataFrame] = None
         self._points: Optional[DataFrame] = None
         self._indexed_count: Optional[int] = None
+        self._pyramid: Optional[_Pyramid] = None
 
     # -- §3.1 load -------------------------------------------------------
 
@@ -63,6 +136,7 @@ class ArrowClusterEngine:
             pts, f"{self.workdir}/hierarchy", self.opts, prepared=True
         )
         self._indexed_count = None
+        self._pyramid = None
         return self
 
     def _require(self) -> DataFrame:
@@ -95,6 +169,7 @@ class ArrowClusterEngine:
             self._points.unionByName(pts) if self._points is not None else pts
         )
         self._indexed_count = None
+        self._pyramid = None
         return self
 
     @property
@@ -107,6 +182,39 @@ class ArrowClusterEngine:
             )
         return self._indexed_count
 
+    # -- resident pyramid -------------------------------------------------
+
+    @property
+    def resident_zoom(self) -> Optional[int]:
+        """Deepest zoom the resident pyramid holds (min_zoom - 1 when not
+        even min_zoom fits the cap), or None before the first read."""
+        return None if self._pyramid is None else self._pyramid.zoom
+
+    def _resident(self) -> _Pyramid:
+        """The resident pyramid, built on first use: one zoom-grouped
+        count picks the deepest zoom whose running node count fits
+        `_RESIDENT_NODE_CAP`, then one `small_side` fetch of the
+        finalized zooms down to it."""
+        if self._pyramid is None:
+            nodes, cap = self._require(), _RESIDENT_NODE_CAP
+            counts = dict(nodes.groupBy("zoom").count().collect())
+            z, total = self.opts.min_zoom - 1, 0
+            for zz in range(self.opts.min_zoom, self.opts.leaf_zoom + 1):
+                total += counts.get(zz, 0)
+                if total > cap:
+                    break
+                z = zz
+            fin = gc.finalize_clusters(nodes.filter(F.col("zoom") <= z), self.opts)
+            tbl = small_side(fin, cap) if z >= self.opts.min_zoom else None
+            if tbl is None:
+                z, tbl = self.opts.min_zoom - 1, to_arrow_schema(fin.schema).empty_table()
+            log.info(
+                "resident pyramid: nodes per zoom %s, resident to zoom %d, cap %d",
+                dict(sorted(counts.items())), z, cap,
+            )
+            self._pyramid = _Pyramid(tbl, self.opts.min_zoom, z)
+        return self._pyramid
+
     # -- §3.2 getClusters ------------------------------------------------
 
     def _limit_zoom(self, zoom: int) -> int:
@@ -114,10 +222,14 @@ class ArrowClusterEngine:
         return max(self.opts.min_zoom, min(int(zoom), self.opts.max_zoom + 1))
 
     def get_clusters(self, bbox, zoom: int) -> DataFrame:
-        """Q1: bbox+zoom → ClusterOutput-shaped DataFrame. Partition
+        """Q1: bbox+zoom → ClusterOutput-shaped DataFrame. A resident zoom
+        is a NumPy bbox mask over its slice; a deeper one is partition
         pruning on zoom, then bbox on output positions (antimeridian
         handled inside bbox_predicate as an OR of ranges)."""
         z = self._limit_zoom(zoom)
+        res = self._resident()
+        if z <= res.zoom:
+            return res.frame(self.spark, res.in_bbox(z, bbox))
         nodes = self._require().filter(F.col("zoom") == z)
         out = gc.finalize_clusters(nodes, self.opts)
         return out.filter(bbox_predicate(*bbox))
@@ -126,11 +238,14 @@ class ArrowClusterEngine:
 
     def get_children(self, zoom: int, cell_x: int, cell_y: int) -> DataFrame:
         """Q2: nodes at zoom+1 whose cell>>1 equals the given cell."""
+        x, y = int(cell_x), int(cell_y)
+        res = self._resident()
+        if zoom + 1 <= res.zoom:
+            return res.frame(self.spark, res.under(zoom + 1, x, y, 1))
         nodes = self._require().filter(F.col("zoom") == zoom + 1)
         return gc.finalize_clusters(
             nodes.filter(
-                (F.floor(F.col("cell_x") / 2) == cell_x)
-                & (F.floor(F.col("cell_y") / 2) == cell_y)
+                (F.shiftright("cell_x", 1) == x) & (F.shiftright("cell_y", 1) == y)
             ),
             self.opts,
         )
@@ -181,47 +296,54 @@ class ArrowClusterEngine:
         The follow-the-single-child walk is equivalent to "first zoom whose
         descendant-cell count under the anchor is not 1": while the chain
         is single, the descendant count IS 1. Descendancy is a shiftright
-        of the (non-negative) cell coords by `zoom - z0`, taken from the
-        zoom column, so one partition-pruned scan of the zooms below the
-        anchor and one groupBy("zoom") count give every level's count; the
-        walk itself runs on the ≤ max_zoom + 1 collected rows. A
-        nonexistent anchor cell has count 0 at z0 + 1 and returns z0 + 1,
-        and an anchor at the leaf zoom has no level below it and returns
-        max_zoom + 1, both like the walk."""
+        of the (non-negative) cell coords by `zoom - z0`. Resident zooms
+        count their descendants with two `searchsorted` probes each; once
+        the walk passes the resident pyramid, one partition-pruned scan of
+        the remaining zooms and one groupBy("zoom") count give every
+        remaining level's count, and the walk goes on over those
+        ≤ max_zoom + 1 collected rows. A nonexistent anchor cell has count
+        0 at z0 + 1 and returns z0 + 1, and an anchor at the leaf zoom has
+        no level below it and returns max_zoom + 1, both like the walk."""
         z0, top = int(zoom), self.opts.max_zoom + 1
-        below = self._require().filter((F.col("zoom") > z0) & (F.col("zoom") <= top))
-        shift = F.col("zoom") - z0  # F.shiftright takes only a literal shift
-
-        def up(c):
-            return F.call_function("shiftright", F.col(c), shift)
-
+        x, y = int(cell_x), int(cell_y)
+        res = self._resident()
+        first = z0 + 1
+        while first <= min(top, res.zoom):
+            if len(res.under(first, x, y, first - z0)) != 1:
+                return first
+            first += 1
+        if first > top:
+            return top
+        below = self._require().filter((F.col("zoom") >= first) & (F.col("zoom") <= top))
+        shift = F.col("zoom") - z0
         counts = dict(
-            below.filter((up("cell_x") == cell_x) & (up("cell_y") == cell_y))
+            below.filter((_shifted("cell_x", shift) == x) & (_shifted("cell_y", shift) == y))
             .groupBy("zoom")
             .count()
             .collect()
         )
-        for z in range(z0 + 1, top + 1):
+        for z in range(first, top + 1):
             if counts.get(z, 0) != 1:
                 return z
         return top
 
     def get_descendants(self, zoom: int, cell_x: int, cell_y: int, max_depth_zoom: int) -> DataFrame:
         """J2: all nodes under (zoom,cell) down to max_depth_zoom —
-        closed-form ancestor test, no recursion."""
+        closed-form ancestor test (the expansion zoom's shiftright), no
+        recursion."""
         nodes = self._require().filter(
             (F.col("zoom") > zoom) & (F.col("zoom") <= max_depth_zoom)
         )
-        shift = F.pow(F.lit(2.0), F.col("zoom") - zoom)
+        shift = F.col("zoom") - zoom
         return nodes.filter(
-            (F.floor(F.col("cell_x") / shift) == cell_x)
-            & (F.floor(F.col("cell_y") / shift) == cell_y)
+            (_shifted("cell_x", shift) == cell_x) & (_shifted("cell_y", shift) == cell_y)
         )
 
     def unload(self) -> None:
         self._nodes = None
         self._points = None
         self._indexed_count = None
+        self._pyramid = None
 
 
 class GreedyClusterEngine:
@@ -349,7 +471,10 @@ class ClusterLayer:
 
     The cache holds COLLECTED rows (the reference caches the materialized
     output table, not a lazy query): cluster outputs at one zoom are
-    screen-sized by construction, never corpus-sized."""
+    screen-sized by construction, never corpus-sized. A re-query at a
+    zoom the engine's resident pyramid holds runs no Spark job either:
+    the engine answers it from its driver-held node table, and collecting
+    that local frame runs none; deeper zooms are one pruned scan."""
 
     def __init__(
         self,

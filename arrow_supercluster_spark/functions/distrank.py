@@ -55,13 +55,16 @@ def zip_scan(
     running sum of each column in rank order (inclusive).
 
     Returns `(df_out, n_rows, scan_total)` — the totals are computed in
-    pass 1 (scan_total is None without scan_col, a float for a single
-    column, a list of floats for a list). The sort is materialized
+    pass 1 (scan_total is None without scan_col, a number for a single
+    column, a list of numbers for a list). An integral scan column is
+    summed in int64 end to end, so its total is an exact int and its
+    running sum is exact up to 2^53 (the `scan_out` column stays double);
+    a null in it adds 0, as SQL's SUM skips it. The sort is materialized
     (localCheckpoint) first so both passes see the identical
     partitioning; `df.sort` range-partitions, so no stage sees more than
     one partition's rows."""
     from pyspark import TaskContext
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+    from pyspark.sql.types import DoubleType, IntegralType, LongType, StructField, StructType
 
     from arrow_supercluster_spark.functions.checkpoint import truncate
 
@@ -115,30 +118,38 @@ def zip_scan(
         )
         return ranked, acc, None
 
+    integral = [isinstance(s.schema[c].dataType, IntegralType) for c in scan_cols]
+    zeros = [0 if i else 0.0 for i in integral]
+
+    def values(pdf, i):
+        if integral[i]:
+            return pdf[scan_cols[i]].fillna(0).to_numpy(dtype="int64")
+        return pdf[scan_cols[i]].to_numpy(dtype="float64")
+
     def summarize(batches):
-        n, tot = 0, [0.0] * k
+        n, tot = 0, list(zeros)
         for pdf in batches:
             n += len(pdf)
-            for i, c in enumerate(scan_cols):
+            for i in range(k):
                 if len(pdf):
                     # cumsum, not np.sum: keep strict left-to-right
                     # association so chained offsets reproduce a
                     # sequential scan's grouping (module doc)
-                    tot[i] += float(
-                        np.cumsum(pdf[c].to_numpy(dtype="float64"))[-1]
-                    )
+                    tot[i] += np.cumsum(values(pdf, i))[-1].item()
         row = {"pid": [TaskContext.get().partitionId()], "n": [n]}
         for i in range(k):
             row[f"s{i}"] = [tot[i]]
         yield pd.DataFrame(row)
 
-    schema1 = "pid int, n long" + "".join(f", s{i} double" for i in range(k))
+    schema1 = "pid int, n long" + "".join(
+        f", s{i} {'long' if integral[i] else 'double'}" for i in range(k)
+    )
     parts = {
         r["pid"]: (r["n"], [r[f"s{i}"] for i in range(k)])
         for r in s.mapInPandas(summarize, schema1).collect()
     }
     offsets: dict[int, tuple[int, list]] = {}
-    acc_n, acc_s = 0, [0.0] * k
+    acc_n, acc_s = 0, list(zeros)
     for pid in sorted(parts):
         offsets[pid] = (acc_n, list(acc_s))
         acc_n += parts[pid][0]
@@ -147,19 +158,19 @@ def zip_scan(
 
     def add_cols(batches):
         pid = TaskContext.get().partitionId()
-        seen, run = offsets.get(pid, (0, [0.0] * k))
+        seen, run = offsets.get(pid, (0, zeros))
         run = list(run)
         for pdf in batches:
             pdf = pdf.copy()
             pdf[out] = np.arange(seen, seen + len(pdf), dtype="int64")
             seen += len(pdf)
-            for i, (c, o) in enumerate(zip(scan_cols, scan_outs)):
-                v = pdf[c].to_numpy(dtype="float64")
+            for i, o in enumerate(scan_outs):
+                v = values(pdf, i)
                 # seed the cumsum with the carried offset so association
                 # stays ((offset + v1) + v2) + ... — sequential form
                 cum = np.cumsum(np.concatenate(([run[i]], v)))[1:]
-                pdf[o] = cum
-                run[i] = float(cum[-1]) if len(cum) else run[i]
+                pdf[o] = cum.astype("float64")
+                run[i] = cum[-1].item() if len(cum) else run[i]
             yield pdf
 
     fields = list(s.schema.fields) + [StructField(out, LongType())]

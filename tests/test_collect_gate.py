@@ -38,6 +38,10 @@ ALLOWLIST: dict[str, str] = {
         "1-row global count agg",
     "engine.py::get_cluster_expansion_zoom":
         "<= max_zoom + 1 rows, one count per zoom below the anchor",
+    "engine.py::_resident":
+        "resident-pyramid build, once per load/append: <= leaf_zoom + 1 "
+        "rows of the zoom-grouped node count, then the finalized resident "
+        "zooms through small_side, at most _RESIDENT_NODE_CAP = 1M rows",
     "engine.py::get_clusters":
         "user-facing engine API contract (reference getClusters returns "
         "an array): rows bounded by the viewport/zoom result the caller "
@@ -57,7 +61,8 @@ ALLOWLIST: dict[str, str] = {
         "edges, the radius hierarchy's _DRIVER_LEVEL_CAP, pagerank's "
         "_DRIVER_EDGE_CAP of 2M edges, greedy cc's _CC_EDGE_CAP of 200k "
         "candidate edges per lookahead probe, triangle_counts' "
-        "_TRI_BITSET_MAX_NODES of 16384 distinct nodes)",
+        "_TRI_BITSET_MAX_NODES of 16384 distinct nodes, the grid engine's "
+        "_RESIDENT_NODE_CAP of 1M finalized nodes)",
     "operators/greedy.py::_id_space":
         "1-row (count, max_id) agg fixing the cluster-id space",
     "operators/greedy.py::greedy_hierarchy_cc":

@@ -59,6 +59,21 @@ def test_zip_scan_running_sum_matches_window(spark):
     assert tot == pytest.approx(sum(r.v for r in df.collect()), abs=1e-7)
 
 
+def test_zip_scan_integral_column_sums_exactly(spark):
+    """An integral scan column is summed in int64: the total is an exact
+    int and each running sum is the window's exact long rounded once to
+    double, beyond 2^53 where float64 accumulation drifts; a null adds 0,
+    as SQL's SUM skips it."""
+    rows = [(i, None if i == 17 else (1 << 50) + 7 * i) for i in range(300)]
+    df = spark.createDataFrame(rows, "uid long, c long").repartition(7)
+    out, n, tot = zip_scan(df, ["uid"], scan_col="c", scan_out="cum")
+    assert n == 300
+    assert type(tot) is int and tot == sum(c for _, c in rows if c is not None)
+    w = Window.orderBy("uid").rowsBetween(Window.unboundedPreceding, 0)
+    want = {r.uid: float(r.cum) for r in df.select("uid", F.sum("c").over(w).alias("cum")).collect()}
+    assert {r.uid: r.cum for r in out.collect()} == want
+
+
 @pytest.mark.parametrize("n,k", [(977, 10), (40, 4), (3, 10), (10, 10), (11, 4)])
 def test_ntile_bucket_matches_sql_ntile(spark, n, k):
     df = _frame(spark, n=n, parts=5)

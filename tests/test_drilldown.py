@@ -4,7 +4,8 @@
 follow-the-single-child walk, stepped in DuckDB over the node table built
 by the package's SQL twins; `get_leaves` pages against a
 `row_number() OVER (ORDER BY id)` slice. Both reads run a bounded number
-of Spark jobs, counted under a job group.
+of Spark jobs, counted under a job group; an expansion zoom over the
+resident pyramid runs none.
 """
 
 import duckdb
@@ -12,6 +13,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from arrow_supercluster_spark import engine
 from arrow_supercluster_spark.config import ClusterOptions
 from arrow_supercluster_spark.engine import ArrowClusterEngine
 from arrow_supercluster_spark.operators import grid_cluster as gc
@@ -132,9 +134,20 @@ def _jobs(spark, name, fn):
 
 
 def test_drilldown_job_counts(spark, corpus):
-    """One pruned scan each: the zoom-grouped count is at most its
-    shuffle stage plus the result, a leaves page a single job."""
+    """The resident pyramid builds in at most 3 jobs, after which an
+    expansion zoom over resident zooms runs none. With nothing resident
+    the expansion zoom is one pruned scan: the zoom-grouped count is at
+    most its shuffle stage plus the result. A leaves page is a single job
+    either way."""
     eng, con = corpus
     cx, cy, _ = _nodes(con, 0)[0]
-    assert _jobs(spark, "drill_expansion", lambda: eng.get_cluster_expansion_zoom(0, cx, cy)) <= 2
+    eng._pyramid = None
+    assert _jobs(spark, "drill_resident_build", eng._resident) <= 3
+    assert _jobs(spark, "drill_expansion_resident", lambda: eng.get_cluster_expansion_zoom(0, cx, cy)) == 0
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(engine, "_RESIDENT_NODE_CAP", 0)
+        eng._pyramid = None
+        eng._resident()
+        assert _jobs(spark, "drill_expansion", lambda: eng.get_cluster_expansion_zoom(0, cx, cy)) <= 2
+    eng._pyramid = None
     assert _jobs(spark, "drill_leaves", lambda: eng.get_leaves(0, cx, cy, limit=5, offset=3).collect()) == 1

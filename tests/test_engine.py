@@ -157,8 +157,11 @@ def test_layer_memoization(spark, sf_dir):
     assert layer._engine is engine1
     assert max_job_id() == before
 
-    out3 = layer.get_clusters(zoom=5.0)  # integer zoom changed → requery
-    assert max_job_id() > before
+    # integer zoom changed → requery; zoom 5 is in the engine's resident
+    # pyramid, so the requery itself runs no Spark job either
+    out3 = layer.get_clusters(zoom=5.0)
+    assert out3 is not out1 and {r.zoom for r in out3} == {5}
+    assert engine1.resident_zoom >= 5 and max_job_id() == before
     assert out3 is layer.get_clusters(zoom=5.9)
 
 
