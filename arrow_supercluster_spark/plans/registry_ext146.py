@@ -32,6 +32,9 @@ from arrow_supercluster_spark.sources.tables import read_events
 
 _VAR_ALPHA = 0.95
 _MMD_SCALE = 1_000_000_000
+# q_kernel_mmd: scaled kernel values whose fraction lies within this band
+# of .5 are rounded by Spark, not NumPy (see _k_fn)
+_MMD_HALF_BAND = 1e-6
 
 
 # ===========================================================================
@@ -299,12 +302,15 @@ def q_kernel_mmd(spark, sf_dir):
     # expression over their exact long sums.  Pass 2 recomputes the
     # bit-identical d2 matrix (fold_d2 = the zip_with left fold) and
     # emits the six kernel partial sums with h broadcast in as a
-    # column.  k_s uses np.exp where Spark used java.lang.Math.exp —
-    # both ≤1 ulp from the true value; after ×1e9 scaling + HALF_UP a
-    # divergence needs a value within ~2e-10 of a rounding boundary,
-    # and the output is verified identical to the pair-join form at
-    # all three SFs (exceptAll = 0) and against the DuckDB twin (whose
-    # exp is the same C libm family).
+    # column.  k_s uses np.exp where Spark uses java.lang.Math.exp —
+    # both ≤1 ulp from the true value, so after ×1e9 scaling they can
+    # differ by a few 1e-7, and HALF_UP can only tell them apart for a
+    # value that close to x.5.  Cells within _MMD_HALF_BAND of x.5 are
+    # left out of the NumPy sums and emitted as (cls, d2, h) rows, which
+    # Spark's own round(exp(-d2/h) * SCALE) then rounds.  The output is
+    # verified identical to the pair-join form at all three SFs
+    # (exceptAll = 0) and against the DuckDB twin (whose exp is the same
+    # C libm family).
     import numpy as np
     import pandas as pd
 
@@ -332,44 +338,54 @@ def q_kernel_mmd(spark, sf_dir):
         (F.sum("s1e3") * 1.0 / (1e3 * F.sum("cnt"))).alias("h")
     )
 
+    band = _MMD_HALF_BAND
+    cols = ["kxx", "kyy", "kxy", "nxx", "nyy", "nxy"]
+
     def _k_fn(pdf):
         pa, pb, a, b_ = _sides(pdf)
-        cols = ["kxx", "kyy", "kxy", "nxx", "nyy", "nxy"]
         if a.empty or b_.empty:
-            return pd.DataFrame({c: [] for c in cols})
+            return pd.DataFrame({c: [] for c in cols + ["cls", "d2", "h"]})
         h = float(pdf["h"].iat[0])
         d2 = bp.fold_d2(np.stack(a["v"].to_numpy()), np.stack(b_["v"].to_numpy()))
-        k_s = bp.half_up(np.exp(-d2 / h) * _MMD_SCALE)
+        scaled = np.exp(-d2 / h) * _MMD_SCALE
+        k_s = bp.half_up(scaled)
         mask = bp.pair_mask(
             a["vec_id"].to_numpy(), b_["vec_id"].to_numpy(), pa == pb
         )
+        flag = mask & (np.abs(scaled - np.floor(scaled) - 0.5) <= band)
         ga = a["g"].to_numpy()[:, None]
         gb = b_["g"].to_numpy()[None, :]
         xx = (ga == 0) & (gb == 0) & mask
         yy = (ga == 1) & (gb == 1) & mask
         xy = (ga != gb) & mask
-        return pd.DataFrame(
-            [
-                {
-                    "kxx": int(k_s[xx].sum()), "kyy": int(k_s[yy].sum()),
-                    "kxy": int(k_s[xy].sum()), "nxx": int(xx.sum()),
-                    "nyy": int(yy.sum()), "nxy": int(xy.sum()),
-                }
-            ]
-        )
+        # row 0: the partial sums; then one row per flagged cell
+        first = {
+            "kxx": k_s[xx & ~flag].sum(), "kyy": k_s[yy & ~flag].sum(),
+            "kxy": k_s[xy & ~flag].sum(), "nxx": xx.sum(),
+            "nyy": yy.sum(), "nxy": xy.sum(),
+        }
+        n = int(flag.sum())
+        cls = np.where(xx, "kxx", np.where(yy, "kyy", "kxy"))[flag]
+        return pd.DataFrame({
+            **{c: np.r_[first[c], np.zeros(n, dtype=np.int64)] for c in cols},
+            "cls": [None, *cls],
+            "d2": np.r_[np.nan, d2[flag]],
+            "h": np.r_[np.nan, np.full(n, h)],
+        })
 
     kterms = bp.block_pair_groups(
         emb.crossJoin(F.broadcast(bw)),
         _k_fn,
-        "kxx long, kyy long, kxy long, nxx long, nyy long, nxy long",
+        "kxx long, kyy long, kxy long, nxx long, nyy long, nxy long, "
+        "cls string, d2 double, h double",
     )
+    k_spark = F.round(F.exp(-F.col("d2") / F.col("h")) * _MMD_SCALE).cast("long")
     sums = kterms.agg(
-        F.sum("kxx").alias("kxx"),
-        F.sum("kyy").alias("kyy"),
-        F.sum("kxy").alias("kxy"),
-        F.sum("nxx").alias("nxx"),
-        F.sum("nyy").alias("nyy"),
-        F.sum("nxy").alias("nxy"),
+        *[
+            F.sum(F.col(c) + F.when(F.col("cls") == c, k_spark).otherwise(0)).alias(c)
+            for c in cols[:3]
+        ],
+        *[F.sum(c).alias(c) for c in cols[3:]],
     )
     return sums.select(
         F.col("nxx").cast("long").alias("n_xx_pairs"),

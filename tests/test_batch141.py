@@ -1,5 +1,5 @@
 """Batch-141 tests: ABC-XYZ, VaR/CVaR, kernel MMD — python oracles +
-null-calibration/coherence properties."""
+null-calibration/coherence properties, and kernel MMD's rounding guard."""
 
 import math
 from collections import Counter, defaultdict
@@ -102,3 +102,17 @@ def test_kernel_mmd_python_oracle_and_null(spark, sf_dir):
     assert abs(r.mmd2 - round(mmd2, 8)) < 1e-9
     # null calibration: an id-parity split of iid vectors ⇒ MMD² ≈ 0
     assert abs(r.mmd2) < 0.01
+
+
+def test_kernel_mmd_guarded_cells_round_as_numpy(spark, sf_dir, monkeypatch):
+    """Cells within _MMD_HALF_BAND of x.5 are rounded by Spark's own
+    expression instead of NumPy's HALF_UP: closing the band (no cell goes
+    to Spark) or widening it to 0.49 (98 % of cells do) gives the same
+    row as the default band."""
+    from arrow_supercluster_spark.plans import registry_ext146
+
+    rows = []
+    for band in (registry_ext146._MMD_HALF_BAND, -1.0, 0.49):
+        monkeypatch.setattr(registry_ext146, "_MMD_HALF_BAND", band)
+        rows += registry_ext146.q_kernel_mmd(spark, sf_dir).collect()
+    assert rows[0] == rows[1] == rows[2]

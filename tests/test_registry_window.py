@@ -24,8 +24,8 @@ driver-green in CORRECTNESS_r09.json.
 Round 11 (VERDICT r10 "Next round" #1 + #10): _ROTATION_R11 keeps the two
 r10 slots whose array outputs crashed the driver's canonicalizer (their
 twins now emit canonical strings) and rotates in 38 more never-checked
-entries; every slate member passed tools/rotation_check.py (strict harness
-+ driver-canon probe) at sf0.01 before entering the window."""
+entries; every slate member passed the named form of tools/strict_sweep.py
+(strict harness + driver-canon probe) at sf0.01 before entering the window."""
 
 import json
 import pathlib

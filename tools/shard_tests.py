@@ -14,8 +14,9 @@ mid-batch-land): the sharded run finishes in ~10-15 min, short enough
 to run at final HEAD with no edits in flight.
 
 Usage: python tools/shard_tests.py [n_shards]
-Exit code 0 iff every shard passed.  Per-shard tails land in
-/tmp/shard_<i>.log; the summary line counts pass/fail across shards.
+Exit code 0 iff every shard passed.  Each shard writes its log to
+/tmp/shard_<i>.log and its per-test durations (junitxml) to
+/tmp/shard_<i>.xml; the summary line counts pass/fail across shards.
 
 This is a dev-facing test runner, collect-gate-exempt: it runs pytest
 subprocesses and parses their summaries; it is never part of a
@@ -24,7 +25,6 @@ registered query plan and moves no DataFrame rows itself.
 
 from __future__ import annotations
 
-import os
 import pathlib
 import re
 import subprocess
@@ -52,7 +52,6 @@ def main() -> int:
         if not shard:
             continue
         log = open(f"/tmp/shard_{i}.log", "w")
-        env = dict(os.environ)
         procs.append(
             (
                 i,
@@ -61,12 +60,12 @@ def main() -> int:
                     # -m 'not slow' tier filter: the sharded run IS the
                     # full suite (r11 tiering, VERDICT r10 #2)
                     [sys.executable, "-m", "pytest", "-q",
-                     "-p", "no:cacheprovider", "-o", "addopts="]
+                     "-p", "no:cacheprovider", "-o", "addopts=",
+                     f"--junitxml=/tmp/shard_{i}.xml"]
                     + [str(f) for f in shard],
                     cwd=str(REPO),
                     stdout=log,
                     stderr=subprocess.STDOUT,
-                    env=env,
                 ),
                 log,
             )
