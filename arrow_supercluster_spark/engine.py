@@ -17,8 +17,15 @@ nodes than occupied cells, so the top of the pyramid fits whatever the
 corpus size. The first read builds it (at most 3 jobs); `load()`,
 `append()` and `unload()` drop it. `get_clusters`, `get_children` and the
 expansion-zoom walk at resident zooms are slices and `searchsorted` over
-that table and run no Spark job; deeper zooms and `get_leaves` read the
-node table and the points, partition-pruned on zoom.
+that table and run no Spark job; deeper zooms read the node table,
+partition-pruned on zoom.
+
+`get_leaves` has its own resident copy, the analog of the reference's
+DFS over indexes that cover every point (arrow-cluster-engine.ts:231-235,
+312-348): when the loaded points fit `_RESIDENT_POINT_CAP`, the first
+leaves read fetches them with their leaf-zoom cells (one job) and holds
+them sorted by id, and a page is a NumPy mask over those cells and a
+slice, with no Spark job. Over the cap, pages read the points.
 
 Caching/invalidation follows the layer's rules
 (arrow-cluster-layer.ts:46-55,84-118): rebuild only when data/options
@@ -52,6 +59,11 @@ log = logging.getLogger(__name__)
 # Node budget of the resident pyramid. A finalized node row is about 53 B
 # in Arrow (9.65 MB for 181,682 rows), so the cap holds about 53 MB.
 _RESIDENT_NODE_CAP = 1_000_000
+
+# Row budget of the resident leaves. A point row with its two leaf cells
+# is about 50 B in Arrow for (id, lng, lat, city), so the cap holds
+# about 50 MB.
+_RESIDENT_POINT_CAP = 1_000_000
 
 
 def _shifted(c: str, shift) -> F.Column:
@@ -103,6 +115,29 @@ class _Pyramid:
         return spark.createDataFrame(self.tbl.take(rows))
 
 
+class _Leaves:
+    """The loaded points on the driver, sorted by id with nulls first
+    (Spark's ascending order), and their leaf-zoom cells as NumPy
+    arrays."""
+
+    def __init__(self, tbl: pa.Table, leaf_zoom: int):
+        self.leaf_zoom = leaf_zoom
+        tbl = tbl.sort_by([("id", "ascending")], null_placement="at_start").combine_chunks()
+        self.cx, self.cy = tbl.column("cell_x").to_numpy(), tbl.column("cell_y").to_numpy()
+        self.tbl = tbl.drop_columns(["cell_x", "cell_y"])
+
+    def page(self, z: int, x: int, y: int, limit: Optional[int], offset: int) -> pa.Table:
+        """Ranks offset + 1 .. offset + limit of the points in cell (x, y)
+        of zoom z <= leaf_zoom, with an int32 `rank`. A point's zoom-z
+        cell is its leaf cell shifted right by leaf_zoom - z (the nested
+        floor identity the hierarchy rollup relies on)."""
+        d = self.leaf_zoom - z
+        rows = np.flatnonzero((self.cx >> d == x) & (self.cy >> d == y))
+        rows = rows[offset:] if limit is None else rows[offset:offset + limit]
+        rank = np.arange(offset + 1, offset + 1 + len(rows), dtype=np.int32)
+        return self.tbl.take(rows).append_column("rank", pa.array(rank))
+
+
 class ArrowClusterEngine:
     """load(points) → query surface over the persisted hierarchy."""
 
@@ -121,6 +156,8 @@ class ArrowClusterEngine:
         self._points: Optional[DataFrame] = None
         self._indexed_count: Optional[int] = None
         self._pyramid: Optional[_Pyramid] = None
+        # None until the first leaves read, then _Leaves or False (over the cap)
+        self._leaves = None
 
     # -- §3.1 load -------------------------------------------------------
 
@@ -137,6 +174,7 @@ class ArrowClusterEngine:
         )
         self._indexed_count = None
         self._pyramid = None
+        self._leaves = None
         return self
 
     def _require(self) -> DataFrame:
@@ -170,6 +208,7 @@ class ArrowClusterEngine:
         )
         self._indexed_count = None
         self._pyramid = None
+        self._leaves = None
         return self
 
     @property
@@ -186,34 +225,60 @@ class ArrowClusterEngine:
 
     @property
     def resident_zoom(self) -> Optional[int]:
-        """Deepest zoom the resident pyramid holds (min_zoom - 1 when not
-        even min_zoom fits the cap), or None before the first read."""
+        """Deepest zoom the resident pyramid holds (the node table's top
+        zoom minus one when not even that fits the cap), or None before
+        the first read."""
         return None if self._pyramid is None else self._pyramid.zoom
 
     def _resident(self) -> _Pyramid:
         """The resident pyramid, built on first use: one zoom-grouped
         count picks the deepest zoom whose running node count fits
         `_RESIDENT_NODE_CAP`, then one `small_side` fetch of the
-        finalized zooms down to it."""
+        finalized zooms down to it. The pyramid starts at the node
+        table's top zoom: min_zoom, or the leaf zoom when
+        max_zoom < min_zoom leaves no other level."""
         if self._pyramid is None:
             nodes, cap = self._require(), _RESIDENT_NODE_CAP
+            top = min(self.opts.min_zoom, self.opts.leaf_zoom)
             counts = dict(nodes.groupBy("zoom").count().collect())
-            z, total = self.opts.min_zoom - 1, 0
-            for zz in range(self.opts.min_zoom, self.opts.leaf_zoom + 1):
+            z, total = top - 1, 0
+            for zz in range(top, self.opts.leaf_zoom + 1):
                 total += counts.get(zz, 0)
                 if total > cap:
                     break
                 z = zz
             fin = gc.finalize_clusters(nodes.filter(F.col("zoom") <= z), self.opts)
-            tbl = small_side(fin, cap) if z >= self.opts.min_zoom else None
+            tbl = small_side(fin, cap) if z >= top else None
             if tbl is None:
-                z, tbl = self.opts.min_zoom - 1, to_arrow_schema(fin.schema).empty_table()
+                z, tbl = top - 1, to_arrow_schema(fin.schema).empty_table()
             log.info(
                 "resident pyramid: nodes per zoom %s, resident to zoom %d, cap %d",
                 dict(sorted(counts.items())), z, cap,
             )
-            self._pyramid = _Pyramid(tbl, self.opts.min_zoom, z)
+            self._pyramid = _Pyramid(tbl, top, z)
         return self._pyramid
+
+    @property
+    def leaves_resident(self) -> Optional[bool]:
+        """Whether get_leaves pages come from the driver-held points, or
+        None before the first leaves read after load()/append()."""
+        return None if self._leaves is None else bool(self._leaves)
+
+    def _resident_leaves(self) -> Optional[_Leaves]:
+        """The resident leaves, built on the first leaves read: one
+        `small_side` fetch of the loaded points with their leaf cells, so
+        the cells are the hierarchy's own. None when the points exceed
+        `_RESIDENT_POINT_CAP`, a decision kept until load()/append()."""
+        if self._leaves is None:
+            cap, lz = _RESIDENT_POINT_CAP, self.opts.leaf_zoom
+            tbl = small_side(gc.with_cells(self._points, lz, self.opts).drop("x", "y"), cap)
+            self._leaves = False if tbl is None else _Leaves(tbl, lz)
+            log.info(
+                "resident leaves: %s points, cap %d, %s",
+                f"> {cap}" if tbl is None else tbl.num_rows, cap,
+                "on Spark" if tbl is None else "resident",
+            )
+        return self._leaves or None
 
     # -- §3.2 getClusters ------------------------------------------------
 
@@ -268,10 +333,20 @@ class ArrowClusterEngine:
         is at most offset+limit rows (rank within a prefix page = global
         rank). One scan of the points, one job. Without a limit the full
         leaf set is requested, so the rank comes from the distributed
-        two-pass scan (functions/distrank.zip_scan) — no single-partition
-        stage either way."""
+        two-pass scan (functions/distrank.zip_scan) over the member rows
+        — no single-partition stage either way.
+
+        When the loaded points are resident (`_resident_leaves`), a page
+        at a zoom in [0, leaf_zoom] runs no Spark job: it is the slice of
+        the id-sorted points under the node, as a local DataFrame with
+        the Spark path's columns and dataTypes."""
         if self._points is None:
             raise RuntimeError("call load() first")
+        z = int(zoom)
+        if 0 <= z <= self.opts.leaf_zoom and offset >= 0 and (limit is None or limit >= 0):
+            res = self._resident_leaves()
+            if res is not None:
+                return self.spark.createDataFrame(res.page(z, int(cell_x), int(cell_y), limit, offset))
         pts = gc.with_cells(self._points, zoom, self.opts)
         leaves = pts.filter(
             (F.col("cell_x") == cell_x) & (F.col("cell_y") == cell_y)
@@ -283,11 +358,10 @@ class ArrowClusterEngine:
             ).filter(F.col("rank") > offset)
         from arrow_supercluster_spark.functions.distrank import zip_scan
 
-        ranked0, _, _ = zip_scan(leaves.select("id"), ["id"], out="_r0")
-        ranks = ranked0.select(
-            "id", (F.col("_r0") + 1).cast("int").alias("rank")
+        ranked, _, _ = zip_scan(leaves, ["id"], out="_r0")
+        return ranked.select(
+            *leaves.columns, (F.col("_r0") + 1).cast("int").alias("rank")
         ).filter(F.col("rank") > offset)
-        return leaves.join(ranks, "id")
 
     def get_cluster_expansion_zoom(self, zoom: int, cell_x: int, cell_y: int) -> int:
         """Q4 (arrow-cluster-engine.ts:240-256): first zoom > `zoom` where
@@ -344,6 +418,7 @@ class ArrowClusterEngine:
         self._points = None
         self._indexed_count = None
         self._pyramid = None
+        self._leaves = None
 
 
 class GreedyClusterEngine:
@@ -474,7 +549,9 @@ class ClusterLayer:
     screen-sized by construction, never corpus-sized. A re-query at a
     zoom the engine's resident pyramid holds runs no Spark job either:
     the engine answers it from its driver-held node table, and collecting
-    that local frame runs none; deeper zooms are one pruned scan."""
+    that local frame runs none; deeper zooms are one pruned scan. The
+    engine's leaves pages are resident in the same way while the loaded
+    points fit `_RESIDENT_POINT_CAP`."""
 
     def __init__(
         self,

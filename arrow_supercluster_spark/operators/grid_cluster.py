@@ -28,8 +28,6 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -46,10 +44,9 @@ from arrow_supercluster_spark.operators.filters import drop_null_geometry
 # materialize_from_leaf): a PARALLELISM key, not a size cap — AQE still
 # coalesces small buckets together and splits oversized ones to the
 # advisory size, so the value only bounds how many read tasks a
-# zoom-pruned scan gets at small scale.  Env-overridable for cluster
-# deployments (SPARK_GRAFT_WRITE_BUCKETS); the default suits both the
-# local bench and, at 100 TB, is dominated by advisory splitting anyway.
-_WRITE_BUCKETS = int(os.environ.get("SPARK_GRAFT_WRITE_BUCKETS", "8"))
+# zoom-pruned scan gets at small scale; at 100 TB advisory splitting
+# dominates it.
+_WRITE_BUCKETS = 8
 
 NODE_COLS = [
     "zoom", "cell_x", "cell_y", "num_points",
@@ -100,6 +97,38 @@ def cluster_grid(
     return cell_agg(with_cells(pts, zoom, opts), zoom)
 
 
+def _upper_levels(leaf: DataFrame, opts: ClusterOptions) -> DataFrame:
+    """Zooms min_zoom..max_zoom of the node table, rolled up from the leaf
+    aggregates in one hash aggregation. The leaf table is the compressed
+    representation (one row per occupied cell), and cell_z =
+    floor(cell_leaf / 2^(leaf_zoom − z)) exactly (nested floor identity),
+    so a zoom-range cross join replaces 17 sequential rollup jobs; the
+    shuffle volume is |leaf| × levels, independent of the raw point
+    count."""
+    zooms = leaf.sparkSession.range(opts.min_zoom, opts.max_zoom + 1).select(
+        F.col("id").cast("int").alias("zoom")
+    )
+    shift = F.pow(F.lit(2.0), F.lit(opts.leaf_zoom) - F.col("zoom"))
+    return (
+        leaf.drop("zoom")
+        .crossJoin(F.broadcast(zooms))
+        .groupBy(
+            "zoom",
+            F.floor(F.col("cell_x") / shift).alias("cell_x"),
+            F.floor(F.col("cell_y") / shift).alias("cell_y"),
+        )
+        .agg(
+            F.sum("num_points").alias("num_points"),
+            F.sum("sum_x").alias("sum_x"),
+            F.sum("sum_y").alias("sum_y"),
+            F.min("min_id").alias("min_id"),
+            F.min("min_lng").alias("min_lng"),
+            F.min("min_lat").alias("min_lat"),
+        )
+        .select(*NODE_COLS)
+    )
+
+
 def cluster_hierarchy(
     points: DataFrame, opts: ClusterOptions = DEFAULT_OPTIONS, prepared: bool = False,
 ) -> DataFrame:
@@ -125,30 +154,7 @@ def cluster_hierarchy(
     leaf = truncate(
         cell_agg(with_cells(pts, opts.leaf_zoom, opts), opts.leaf_zoom)
     )
-    spark = leaf.sparkSession
-    zooms = spark.range(opts.min_zoom, opts.max_zoom + 1).select(
-        F.col("id").cast("int").alias("zoom")
-    )
-    shift = F.pow(F.lit(2.0), F.lit(opts.leaf_zoom) - F.col("zoom"))
-    upper = (
-        leaf.drop("zoom")
-        .crossJoin(F.broadcast(zooms))
-        .groupBy(
-            "zoom",
-            F.floor(F.col("cell_x") / shift).alias("cell_x"),
-            F.floor(F.col("cell_y") / shift).alias("cell_y"),
-        )
-        .agg(
-            F.sum("num_points").alias("num_points"),
-            F.sum("sum_x").alias("sum_x"),
-            F.sum("sum_y").alias("sum_y"),
-            F.min("min_id").alias("min_id"),
-            F.min("min_lng").alias("min_lng"),
-            F.min("min_lat").alias("min_lat"),
-        )
-        .select(*NODE_COLS)
-    )
-    return leaf.select(*NODE_COLS).unionByName(upper).repartition("zoom")
+    return leaf.select(*NODE_COLS).unionByName(_upper_levels(leaf, opts)).repartition("zoom")
 
 
 def materialize_hierarchy(
@@ -217,39 +223,13 @@ def materialize_from_leaf(
     # coalescing already sizes those tasks toward the advisory target).
     leaf.write.mode("overwrite").partitionBy("zoom").parquet(path)
 
-    # Derive ALL upper levels from the leaf aggregates in one job: the leaf
-    # table is the compressed representation (one row per occupied cell),
-    # and cell_z = floor(cell_leaf / 2^(leaf_zoom − z)) exactly (nested
-    # floor identity), so a zoom-range cross join + one hash aggregation
-    # replaces 17 sequential rollup jobs. Shuffle volume = |leaf| × levels,
-    # independent of raw point count.
-    # explicit schema on read-back: an EMPTY input writes a partitioned
-    # dir with no part files, and schema inference would throw
-    # UNABLE_TO_INFER_SCHEMA (the reference engine accepts empty tables,
-    # edge-cases.test.ts:13-20); zoom stays a partition column for pruning
-    leaf_df = spark.read.schema(leaf.schema).parquet(path)
-    zooms = spark.range(opts.min_zoom, opts.max_zoom + 1).select(
-        F.col("id").cast("int").alias("zoom")
-    )
-    shift = F.pow(F.lit(2.0), F.lit(opts.leaf_zoom) - F.col("zoom"))
-    upper = (
-        leaf_df.drop("zoom")
-        .crossJoin(F.broadcast(zooms))
-        .groupBy(
-            "zoom",
-            F.floor(F.col("cell_x") / shift).alias("cell_x"),
-            F.floor(F.col("cell_y") / shift).alias("cell_y"),
-        )
-        .agg(
-            F.sum("num_points").alias("num_points"),
-            F.sum("sum_x").alias("sum_x"),
-            F.sum("sum_y").alias("sum_y"),
-            F.min("min_id").alias("min_id"),
-            F.min("min_lng").alias("min_lng"),
-            F.min("min_lat").alias("min_lat"),
-        )
-        .select(*NODE_COLS)
-    )
+    # Derive ALL upper levels from the written leaf in one job
+    # (_upper_levels). Explicit schema on read-back: an EMPTY input writes
+    # a partitioned dir with no part files, and schema inference would
+    # throw UNABLE_TO_INFER_SCHEMA (the reference engine accepts empty
+    # tables, edge-cases.test.ts:13-20); zoom stays a partition column for
+    # pruning.
+    upper = _upper_levels(spark.read.schema(leaf.schema).parquet(path), opts)
     # The UPPER write keeps the rebalance node, keyed (zoom, 8-way cell
     # bucket) instead of zoom alone (guide §6 output sizing): at 100 TB
     # the rebalance still splits oversized partitions into advisory-sized

@@ -745,15 +745,16 @@ _ROTATION_R10 = [
 # the 38 OLDEST never-driver-checked SQL-backed entries in registry
 # insertion order.  Driver-checked union 254 → 292.
 #
-# EVERY slot below passed tools/rotation_check.py at sf0.01 — the strict
-# type-sensitive harness PLUS the driver-canon probe
+# EVERY slot below passes `tools/strict_sweep.py SF_DIR NAME…` at sf0.01 —
+# the strict type-sensitive harness PLUS the driver-canon probe
 # (tests/oracle_harness.driver_canon_probe): the driver's own `_canon`
 # pandas-sorts RAW cells and crashes on list values, which the repo replica
 # did not reproduce before r11 (that divergence is what broke the r10
-# window).  Four otherwise-eligible queries were skipped by the probe for
-# exactly that reason and must stay out of any window until their twins are
-# string-canonicalized: q_embedding_quantize, q_kmeans_step,
-# q_embedding_standardize, q_regex_extract_all.
+# window).  Five otherwise-eligible queries fail the probe for exactly that
+# reason (the full sweep, VERIFY_FULL_r18.json) and must stay out of any
+# window until their twins are string-canonicalized: q_embedding_quantize,
+# q_kmeans_step, q_embedding_standardize, q_regex_extract_all,
+# q_pq_encode.
 _ROTATION_R11 = [
     "q_label_centroids", "q_inverted_index", "q_unigram_logprob",
     "q_stratified_sample",

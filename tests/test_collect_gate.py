@@ -62,7 +62,8 @@ ALLOWLIST: dict[str, str] = {
         "_DRIVER_EDGE_CAP of 2M edges, greedy cc's _CC_EDGE_CAP of 200k "
         "candidate edges per lookahead probe, triangle_counts' "
         "_TRI_BITSET_MAX_NODES of 16384 distinct nodes, the grid engine's "
-        "_RESIDENT_NODE_CAP of 1M finalized nodes)",
+        "_RESIDENT_NODE_CAP of 1M finalized nodes and its "
+        "_RESIDENT_POINT_CAP of 1M loaded points for the leaves pages)",
     "operators/greedy.py::_id_space":
         "1-row (count, max_id) agg fixing the cluster-id space",
     "operators/greedy.py::greedy_hierarchy_cc":

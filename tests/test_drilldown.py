@@ -3,10 +3,15 @@
 `get_cluster_expansion_zoom` is checked against the reference's
 follow-the-single-child walk, stepped in DuckDB over the node table built
 by the package's SQL twins; `get_leaves` pages against a
-`row_number() OVER (ORDER BY id)` slice. Both reads run a bounded number
-of Spark jobs, counted under a job group; an expansion zoom over the
-resident pyramid runs none.
+`row_number() OVER (ORDER BY id)` slice, both from the driver-held points
+and with `_RESIDENT_POINT_CAP` patched below the corpus so they read
+Spark. Both reads run a bounded number of Spark jobs, counted under a job
+group; an expansion zoom over the resident pyramid and a resident leaves
+page run none.
 """
+
+import contextlib
+import logging
 
 import duckdb
 import numpy as np
@@ -101,26 +106,95 @@ def test_expansion_zoom_edge_anchors(corpus):
 
 def _page_want(con, zoom, cx, cy, limit, offset):
     cells = gc.sql_cells("SELECT * FROM pts", zoom, OPTS)
+    upto = "" if limit is None else f"AND rank <= {offset + limit}"
     return con.execute(
         f"""SELECT id, lng, lat, city, rank FROM (
               SELECT id, lng, lat, city, row_number() OVER (ORDER BY id) AS rank
               FROM ({cells}) WHERE cell_x = {cx} AND cell_y = {cy})
-            WHERE rank > {offset} AND rank <= {offset + limit} ORDER BY rank"""
+            WHERE rank > {offset} {upto} ORDER BY rank"""
     ).fetchall()
 
 
-@pytest.mark.parametrize("zoom", [0, 3])
+def _pages(n):
+    """(limit, offset) cases for a node of n points; None is the no-limit call."""
+    return [(5, 0), (4, n // 2), (5, n + 3), (0, 0), (0, 2), (n + 10, 0), (None, 0), (None, n // 2)]
+
+
+@contextlib.contextmanager
+def spark_leaves(eng):
+    """Leaves pages read Spark for the block: no corpus fits the cap."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(engine, "_RESIDENT_POINT_CAP", -1)
+        eng._leaves = None
+        try:
+            yield eng
+        finally:
+            eng._leaves = None
+
+
+def _frame(df):
+    """Column names and dataTypes, and the rows sorted with nulls first (a
+    page by id, as Spark ranks it)."""
+    rows = sorted(map(tuple, df.collect()), key=lambda r: [(v is not None, v) for v in r])
+    return [(f.name, f.dataType) for f in df.schema.fields], rows
+
+
+@pytest.mark.parametrize("zoom", [0, 3, TOP])
 def test_leaves_pages_match_row_number(corpus, zoom):
+    """The largest node's pages, resident and on Spark: the same column
+    names, dataTypes and rows, and the rows are DuckDB's page."""
     eng, con = corpus
     cx, cy, n = _nodes(con, zoom)[0]
-    assert n >= 12
-    for limit, offset in [(5, 0), (4, n // 2), (5, n + 3), (0, 0), (0, 2), (n + 10, 0)]:
-        page = eng.get_leaves(zoom, cx, cy, limit=limit, offset=offset)
-        assert page.columns == ["id", "lng", "lat", "city", "rank"]
-        got = sorted((tuple(r) for r in page.collect()), key=lambda r: r[-1])
-        want = _page_want(con, zoom, cx, cy, limit, offset)
-        assert got == want, (limit, offset)
-        assert len(want) == max(0, min(limit, n - offset))
+    assert n >= (12 if zoom < TOP else 2)
+    cases = _pages(n)
+    got = [_frame(eng.get_leaves(zoom, cx, cy, limit=lim, offset=off)) for lim, off in cases]
+    assert eng.leaves_resident
+    with spark_leaves(eng):
+        want = [_frame(eng.get_leaves(zoom, cx, cy, limit=lim, offset=off)) for lim, off in cases]
+        assert eng.leaves_resident is False
+    for (lim, off), g, w in zip(cases, got, want):
+        assert [name for name, _ in g[0]] == ["id", "lng", "lat", "city", "rank"]
+        assert g == w, (lim, off)
+        assert g[1] == _page_want(con, zoom, cx, cy, lim, off), (lim, off)
+        assert len(g[1]) == max(0, min(n if lim is None else lim, n - off))
+
+
+def test_every_node_leaves_pages(corpus):
+    """Every node at zooms 0, 3 and the leaf zoom: its resident members
+    are the points Spark puts in its cell at that zoom, and every page is
+    DuckDB's."""
+    eng, con = corpus
+    res = eng._resident_leaves()
+    for zoom in (0, 3, TOP):
+        spark_cells = {}
+        for r in gc.with_cells(eng._points, zoom, OPTS).select("id", "cell_x", "cell_y").collect():
+            spark_cells.setdefault((r.cell_x, r.cell_y), []).append(r.id)
+        nodes = _nodes(con, zoom)
+        assert sorted((x, y, len(ids)) for (x, y), ids in spark_cells.items()) == sorted(nodes)
+        for cx, cy, n in nodes:
+            members = res.page(zoom, cx, cy, None, 0).column("id").to_pylist()
+            assert members == sorted(spark_cells[cx, cy]), (zoom, cx, cy)
+            for lim, off in _pages(n):
+                got = [tuple(r.values()) for r in res.page(zoom, cx, cy, lim, off).to_pylist()]
+                assert got == _page_want(con, zoom, cx, cy, lim, off), (zoom, cx, cy, lim, off)
+
+
+@pytest.mark.slow
+def test_every_leaves_page_matches_spark(corpus):
+    """Every node at every zoom, paged through in pages of 3, and its
+    no-limit call, through both paths and against DuckDB."""
+    eng, con = corpus
+    reqs = []
+    for zoom in range(TOP + 1):
+        for cx, cy, n in _nodes(con, zoom):
+            reqs += [(zoom, cx, cy, 3, off) for off in range(0, n + 3, 3)] + [(zoom, cx, cy, None, 0)]
+    call = lambda z, x, y, lim, off: _frame(eng.get_leaves(z, x, y, limit=lim, offset=off))  # noqa: E731
+    got = [call(*r) for r in reqs]
+    with spark_leaves(eng):
+        want = [call(*r) for r in reqs]
+    for r, g, w in zip(reqs, got, want):
+        assert g == w, r
+        assert g[1] == _page_want(con, *r), r
 
 
 def _jobs(spark, name, fn):
@@ -133,12 +207,13 @@ def _jobs(spark, name, fn):
     return len(sc.statusTracker().getJobIdsForGroup(name))
 
 
-def test_drilldown_job_counts(spark, corpus):
+def test_drilldown_job_counts(spark, corpus, caplog):
     """The resident pyramid builds in at most 3 jobs, after which an
     expansion zoom over resident zooms runs none. With nothing resident
     the expansion zoom is one pruned scan: the zoom-grouped count is at
-    most its shuffle stage plus the result. A leaves page is a single job
-    either way."""
+    most its shuffle stage plus the result. The resident leaves build in
+    one job, after which a leaves page runs none; on Spark a page is a
+    single job. Each leaves build logs one line with its decision."""
     eng, con = corpus
     cx, cy, _ = _nodes(con, 0)[0]
     eng._pyramid = None
@@ -150,4 +225,15 @@ def test_drilldown_job_counts(spark, corpus):
         eng._resident()
         assert _jobs(spark, "drill_expansion", lambda: eng.get_cluster_expansion_zoom(0, cx, cy)) <= 2
     eng._pyramid = None
-    assert _jobs(spark, "drill_leaves", lambda: eng.get_leaves(0, cx, cy, limit=5, offset=3).collect()) == 1
+    page = lambda: eng.get_leaves(0, cx, cy, limit=5, offset=3).collect()  # noqa: E731
+    eng._leaves = None
+    with caplog.at_level(logging.INFO, logger=engine.__name__):
+        assert _jobs(spark, "drill_leaves_build", eng._resident_leaves) == 1
+        assert _jobs(spark, "drill_leaves_resident", page) == 0
+        with spark_leaves(eng):
+            eng._resident_leaves()
+            assert _jobs(spark, "drill_leaves", page) == 1
+    assert [r.getMessage() for r in caplog.records if r.getMessage().startswith("resident leaves")] == [
+        f"resident leaves: {len(_corpus())} points, cap {engine._RESIDENT_POINT_CAP}, resident",
+        "resident leaves: > -1 points, cap -1, on Spark",
+    ]

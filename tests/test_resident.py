@@ -6,7 +6,9 @@ forced-Spark path returns, `_RESIDENT_NODE_CAP` patched below every
 zoom's node count: the same rows, column names and dataTypes. The default
 tier checks every node's resident selection against one collect of the
 Spark-finalized node table and a seeded set of reads through both paths;
-the slow tier runs every read for every node through both paths.
+the slow tier runs every read for every node through both paths. The
+degenerate-corpus and `max_zoom < min_zoom` tests also page `get_leaves`
+from the resident leaves and from Spark.
 """
 
 import contextlib
@@ -20,7 +22,7 @@ from arrow_supercluster_spark.config import ClusterOptions
 from arrow_supercluster_spark.engine import ArrowClusterEngine
 from arrow_supercluster_spark.operators import grid_cluster as gc
 from arrow_supercluster_spark.operators.filters import normalize_bbox
-from tests.test_drilldown import OPTS, TOP, _jobs, _nodes, _walk, corpus  # noqa: F401
+from tests.test_drilldown import OPTS, TOP, _frame, _jobs, _nodes, _walk, corpus, spark_leaves  # noqa: F401
 
 WORLD = (-180.0, -85.0, 180.0, 85.0)
 NO_ZOOM_FITS = -1  # not even an empty zoom fits, so every read goes to Spark
@@ -36,10 +38,6 @@ def _cap(eng, cap):
             yield eng
         finally:
             eng._pyramid = None
-
-
-def _frame(df):
-    return [(f.name, f.dataType) for f in df.schema.fields], sorted(map(tuple, df.collect()))
 
 
 def _read(eng, req):
@@ -209,31 +207,84 @@ def _check_against_spark(eng):
     return [r.num_points for r in nodes], got[2:]
 
 
+def _leaves_both(eng, reqs):
+    """Leaves pages from the driver-held points, then on Spark."""
+    call = lambda z, x, y, lim: _frame(eng.get_leaves(z, x, y, limit=lim))  # noqa: E731
+    got = [call(*r) for r in reqs]
+    with spark_leaves(eng):
+        want = [call(*r) for r in reqs]
+    return got, want
+
+
 DEGENERATE = ClusterOptions(max_zoom=3)
 
 
 def test_degenerate_corpora_and_append(spark, tmp_path):
     """An empty corpus, then one point appended, then 49 more at the same
     position: reads agree on both paths at every step, and load() and
-    append() drop the resident pyramid so the next read sees the new
-    table."""
+    append() drop the resident pyramid and the resident leaves so the
+    next read sees the new table and the new points."""
     top = DEGENERATE.max_zoom + 1
     eng = ArrowClusterEngine(spark, DEGENERATE, workdir=str(tmp_path))
     eng.load(_pts(spark, []))
     assert _check_against_spark(eng) == ([], [])
     eng._resident()
     assert eng.resident_zoom == top
+    assert eng.get_leaves(0, 0, 0, limit=5).collect() == [] and eng.leaves_resident
 
     eng.append(_pts(spark, [(0, 12.5, 41.9)]))
-    assert eng.resident_zoom is None
+    assert eng.resident_zoom is None and eng.leaves_resident is None
     (n,), (kids, ez) = _check_against_spark(eng)
     assert n == 1 and len(kids[1]) == 1 and ez == top
+    cell = eng._require().filter("zoom = 0").first()
+    got, want = _leaves_both(eng, [(0, cell.cell_x, cell.cell_y, 5)])
+    assert got == want and [r[0] for r in got[0][1]] == [0]
 
     eng._resident()
     eng.append(_pts(spark, [(i, 12.5, 41.9) for i in range(1, 50)]))
-    assert eng.resident_zoom is None
+    assert eng.resident_zoom is None and eng.leaves_resident is None
     (n,), (kids, ez) = _check_against_spark(eng)
     assert n == 50 and [r[3] for r in kids[1]] == [50] and ez == top
+    got, want = _leaves_both(eng, [(0, cell.cell_x, cell.cell_y, 60)])
+    assert got == want and [r[0] for r in got[0][1]] == list(range(50))
 
     eng.unload()
-    assert eng.resident_zoom is None
+    assert eng.resident_zoom is None and eng.leaves_resident is None
+
+
+INVERTED = ClusterOptions(min_zoom=5, max_zoom=3)
+
+
+def test_inverted_zoom_range(spark, tmp_path):
+    """max_zoom < min_zoom: the node table holds only the leaf zoom 4,
+    below min_zoom, and get_clusters clamps every zoom to min_zoom. No
+    read crashes and both paths agree: clusters, the children and
+    expansion zoom of leaf cells' ancestors, and leaves pages at zooms up
+    to the leaf zoom and past it (which read Spark on both paths). One
+    point has a null id, which ranks first on both paths, and `id` is not
+    the first column, which every page keeps in its place."""
+    leaf = INVERTED.leaf_zoom
+    rows = [(i, 12.5 + 4.0 * (i % 4), 41.9 + 3.0 * (i // 4)) for i in range(12)] + [(None, 12.5, 41.9)]
+    pts = _pts(spark, rows).select("lng", "lat", "id")
+    eng = ArrowClusterEngine(spark, INVERTED, workdir=str(tmp_path)).load(pts)
+    nodes = eng._require().collect()
+    cells = [(r.cell_x, r.cell_y) for r in nodes]
+    assert {r.zoom for r in nodes} == {leaf} and len(cells) > 1
+    reqs = [("clusters", (WORLD, z)) for z in (0, leaf, INVERTED.min_zoom, 9)]
+    for x, y in cells[:2]:
+        for z in (0, leaf - 2, leaf - 1, leaf):
+            d = leaf - z
+            reqs += [(k, (z, x >> d, y >> d)) for k in ("children", "expansion")]
+    got, want = _both(eng, reqs)
+    assert got == want
+    assert any(rows for _, rows in got[4::2]), "no children read found the leaf nodes"
+    x, y = cells[0]
+    past = gc.with_cells(eng._points, leaf + 1, INVERTED).first()
+    pages = [(z, x >> (leaf - z), y >> (leaf - z), 20) for z in (0, leaf)]
+    pages += [(leaf + 1, past.cell_x, past.cell_y, 20), (0, x >> leaf, y >> leaf, None)]
+    got, want = _leaves_both(eng, pages)
+    assert got == want
+    assert [name for name, _ in got[0][0]] == ["lng", "lat", "id", "rank"]
+    first = [r for r in got[0][1] if r[-1] == 1]
+    assert len(got[0][1]) == 13 and first[0][2] is None and got[3] == got[0]
+    assert len(got[1][1]) >= 1 and len(got[2][1]) >= 1
