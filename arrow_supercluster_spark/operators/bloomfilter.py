@@ -86,7 +86,8 @@ def bloom_prefilter(
     exploded k-fold and re-grouped by the probe key to count hits; that
     re-group was a full shuffle of the probe stream — measured 8× slower
     at 16× corpus scale — exactly the anti-pattern the bloom exists to
-    avoid. tools/text_scale_sweep.py guards the regression.)
+    avoid; d601b82:tools/text_scale_sweep.py measured it, and no test or
+    script in this tree guards the regression now.)
     Probe-side columns are carried through unchanged."""
     out = df
     conds = []

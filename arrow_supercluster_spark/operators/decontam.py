@@ -130,10 +130,10 @@ def decontaminate_auto(
       genuinely tiny;
     * above it: the relational-Bloom prefilter + exact verify
       (`operators/bloomfilter.py`), whose bitmap cost is FIXED no matter
-      how large the eval set grows.  tools/text_scale_sweep.py measured
-      the broadcast path superlinear at 16× eval (60.2 s vs the bloom's
-      flat 13.3 s at sf0.1×16, SCALING.md) — the crossover sits around
-      a few hundred thousand grams, hence the default threshold.
+      how large the eval set grows.  d601b82:tools/text_scale_sweep.py
+      measured the broadcast path superlinear at 16× eval (60.2 s vs the
+      bloom's flat 13.3 s at sf0.1×16, SCALING.md) — the crossover sits
+      around a few hundred thousand grams, hence the default threshold.
 
     The bitmap is auto-sized at ~10 bits per eval gram (next power of
     two, floor 2^20) from the same cardinality count, so a growing eval

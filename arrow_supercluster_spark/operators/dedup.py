@@ -99,9 +99,9 @@ def minhash_docs(
     HOF `aggregate` fold ("zero shuffle") was a measured loss at the
     graded scale — the driver's cold bench showed 0.66× with a +1.7 GiB
     peak-RSS step (VERDICT r10 "What's wrong" #3), and the r11 cold-JVM
-    alternated A/B (tools/minhash_ab.py, 3 fresh processes per variant)
-    confirmed it: fold medians 2.27/2.33/2.48 s vs explode 1.87/2.00/2.07
-    s, end-RSS ~3.2 vs ~2.6 GiB.  Spark evaluates higher-order
+    alternated A/B (d601b82:tools/minhash_ab.py, 3 fresh processes per
+    variant) confirmed it: fold medians 2.27/2.33/2.48 s vs explode
+    1.87/2.00/2.07 s, end-RSS ~3.2 vs ~2.6 GiB.  Spark evaluates higher-order
     `aggregate`/`zip_with` lambdas interpreted per element and the fold
     allocates a 16-long array per shingle, which costs more than the
     codegen'd partial min-aggregation plus its (key, 16 longs) shuffle.

@@ -1,44 +1,63 @@
-"""Graph operators beyond connected components (dedup.py): PageRank,
-the user co-occurrence edge set, triangles, label propagation.
+"""Graph operators beyond connected components (dedup.py): one
+propagation primitive with its callers (PageRank, label propagation and
+the registry's fixpoint queries), the user co-occurrence edge set and
+triangles.
 
-Public algorithm (Brin & Page 1998), expressed relationally: rank
-iteration = one join + one aggregate per round, driver-controlled like
-the zoom recursion (SURVEY §3.1) and the components loop (dedup.py).
+`propagate` is the semiring reading of a fixpoint query (GraphBLAS,
+Kepner et al., HPEC 2016): every round is one sparse matrix-vector
+product over the edge table, x'[v] = post(⊕ over the in-edges (u, v) of
+x[u] ⊗ w), synchronous, with ⊕ from a closed set:
+
+- "sum":  Σ x[u]·w (w = 1 without a weight column) — Katz, eigenvector
+  centrality, Markov chains;
+- "walk": Σ x[u] / outdeg(u), the random-walk step — PageRank (the
+  division, not a product with 1/outdeg, is its SQL twin's arithmetic);
+- "min":  min(x[v], min x[u] + w), a null value is "not reached" — BFS
+  hops, Bellman-Ford;
+- "mode": the most frequent x[u], ties to the smallest, a node with no
+  in-edge keeps its own — label propagation.
 
 Scale shape (100 TB of edges):
 - the edge list is materialized once, then gated by one bounded
-  `small_side` fetch: at most `_DRIVER_EDGE_CAP` edges run every round
-  on the driver in NumPy (two `bincount`s per round) and come back as
-  one createDataFrame — the radius hierarchy's tail, for the same
-  reason: at that size a round costs its Spark jobs, not its data;
-- above the cap, edges shuffle ONCE per iteration keyed by destination;
-  ranks are |nodes| rows (small side → broadcastable when nodes ≪
-  edges), and per-iteration results are localCheckpointed so the
-  lineage stays O(1) instead of O(iterations) — the same discipline as
-  the zoom loop;
-- ranks round to 9 decimals each iteration on both paths: double
-  summation order is partition-dependent, and without re-rounding the
-  drift compounds across iterations (the cross-engine parity rationale
-  of plans/registry.py's float discipline).  The tail rounds with
-  `blockpairs.round_half_up`, which reproduces Spark's F.round.
+  `small_side` fetch: at most `_DRIVER_EDGE_CAP` rows run every round on
+  the driver in NumPy (`bincount`, `minimum.at`, a mode over a lexsort)
+  and come back as one createDataFrame — at that size a round costs its
+  Spark jobs, not its data;
+- above the cap, a round is one edge join keyed by the source, one
+  aggregate keyed by the destination and the post-map over |nodes| rows,
+  cut by a lazy `localCheckpoint` so the plan stays O(1) deep (no round
+  joins the state with itself, so the size estimate the cut copies
+  never squares; functions/checkpoint.py);
+- a post-map that rounds every round (`m.round`) rounds alike on both
+  paths: summation order is partition-dependent in Spark and edge
+  order on the driver, and without re-rounding the drift compounds
+  across rounds (plans/registry.py's float discipline).  The tail
+  rounds with `blockpairs.round_half_up`, which reproduces F.round.
 """
 
 from __future__ import annotations
 
+import logging
+
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 from arrow_supercluster_spark.functions.blockpairs import round_half_up
 from arrow_supercluster_spark.functions.checkpoint import truncate
 from arrow_supercluster_spark.functions.small_side import small_side
 
-# Largest edge list whose iterations run on the driver. The sf0.1 user
-# co-occurrence graph (1.58M edges) fits: q_pagerank there took 5.7 s on
-# the tail against 6.8 s distributed (one run each, 4 local cores).
+log = logging.getLogger(__name__)
+
+# Largest gated table (edges plus the start vector's extra nodes) whose
+# rounds run on the driver. The sf0.1 user co-occurrence graph (1.58M
+# edges) fits: q_pagerank there took 5.7 s on the tail against 6.8 s
+# distributed (one run each, 4 local cores).
 _DRIVER_EDGE_CAP = 2_000_000
+_COMBINES = ("sum", "walk", "min", "mode")
 
 
 def cooccurrence_edges(events: DataFrame) -> DataFrame:
@@ -57,6 +76,194 @@ def cooccurrence_edges(events: DataFrame) -> DataFrame:
     )
 
 
+def propagate(
+    edges: DataFrame, x0, combine: str, post=None, iters: int = 1, nodes: DataFrame | None = None
+) -> DataFrame:
+    """`iters` synchronous rounds of `combine` (see the module doc) over
+    `edges` (src, dst[, w]) from the start vector `x0`; returns
+    (node, x).  The nodes are the edges' endpoints plus the keys of
+    `nodes` (a "node" column: isolated nodes the start vector carries);
+    a null key is not a node.
+
+    `x0(node, m)` gives the start value ("mode": a node key) and
+    `post(s, node, m)` maps the combined value s to the next one ("sum"
+    and "walk"; a node with no in-edge combines to 0.0).  Both are
+    written once with operators a Spark Column and a NumPy array share,
+    plus `m`, the few that differ: `m.where(c, a, b)` (b None: null),
+    `m.sqrt`, `m.round(e, d)` (F.round, or `blockpairs.round_half_up`,
+    which reproduces it) and `m.total(e)`, the sum of e over all nodes.
+    x is a double for "sum" and "walk", has the type of `x0 + w` for
+    "min" and the node key's for "mode"."""
+    if combine not in _COMBINES:
+        raise ValueError(f"combine must be one of {_COMBINES}, not {combine!r}")
+    w = ["w"] if "w" in edges.columns else []
+    table = edges.select("src", "dst", *w).filter(F.col("dst").isNotNull())
+    if nodes is not None:
+        fill = [F.lit(None).cast(table.schema[c].dataType).alias(c) for c in table.columns[1:]]
+        table = table.unionByName(nodes.select(F.col("node").alias("src"), *fill))
+    # materialized once: the gate reads the stored rows, and above the
+    # cap every round joins them
+    table = truncate(table.filter(F.col("src").isNotNull()))
+    kind = DoubleType() if combine in ("sum", "walk") else table.schema["src"].dataType
+    if combine == "min":  # the type of x0 + w, read off an analyzed plan (no job)
+        start = _spark_map(table.withColumnRenamed("src", "node"), x0, "node")
+        step = F.lit(None).cast(table.schema["w"].dataType) if w else F.lit(1)
+        kind = start.select(F.col("x") + step).schema[0].dataType
+    local = small_side(table, _DRIVER_EDGE_CAP)
+    if local is None:
+        log.info("propagate %s: > %d edges, cap %d, distributed", combine, _DRIVER_EDGE_CAP,
+                 _DRIVER_EDGE_CAP)
+        return _rounds_spark(table, x0, combine, post, iters, kind)
+    log.info("propagate %s: %d edges, cap %d, driver tail", combine,
+             local.num_rows - local.column("dst").null_count, _DRIVER_EDGE_CAP)
+    node, x = _rounds_np(local, x0, combine, post, iters)
+    schema = StructType([StructField("node", table.schema["src"].dataType), StructField("x", kind)])
+    return table.sparkSession.createDataFrame(
+        pa.table({"node": node, "x": x.cast(to_arrow_type(kind))}), schema
+    )
+
+
+class _SparkOps:
+    """`m` for Spark columns over the rows of `frame`; `total(e)` joins
+    the sum of e back to the frame as a broadcast one-row column."""
+
+    round = staticmethod(F.round)
+    sqrt = staticmethod(F.sqrt)
+
+    def __init__(self, frame: DataFrame):
+        self.frame = frame
+
+    @staticmethod
+    def where(c, a, b):
+        return F.when(c, a) if b is None else F.when(c, a).otherwise(b)
+
+    def total(self, e):
+        t = f"_t{len(self.frame.columns)}"
+        self.frame = self.frame.crossJoin(F.broadcast(self.frame.agg(F.sum(F.lit(e)).alias(t))))
+        return F.col(t)
+
+
+class _NumpyOps:
+    """`m` for NumPy arrays over n nodes; `where(c, a, None)` is a masked
+    array, null where c is false."""
+
+    sqrt = staticmethod(np.sqrt)
+
+    def __init__(self, n: int):
+        self.n = n
+
+    @staticmethod
+    def where(c, a, b):
+        if b is None:
+            return np.ma.masked_array(np.broadcast_to(a, np.shape(c)), mask=~np.asarray(c))
+        return np.where(c, a, b)
+
+    def round(self, e, digits):
+        return round_half_up(np.broadcast_to(e, (self.n,)), digits)
+
+    def total(self, e):
+        return np.broadcast_to(e, (self.n,)).sum()
+
+
+def _spark_map(frame: DataFrame, f, *cols: str) -> DataFrame:
+    """(node, x) with x = f(*cols, m) over the rows of `frame`."""
+    m = _SparkOps(frame)
+    x = f(*(F.col(c) for c in cols), m)
+    return m.frame.select("node", F.lit(x).alias("x"))
+
+
+def _rounds_spark(table: DataFrame, x0, combine: str, post, iters: int, kind) -> DataFrame:
+    """The relational rounds of `propagate` over its materialized table."""
+    edges = table.filter(F.col("dst").isNotNull())
+    nodes = (
+        table.select(F.col("src").alias("node"))
+        .union(edges.select(F.col("dst").alias("node")))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+    w = F.col("w") if "w" in table.columns else F.lit(1)
+    if combine == "walk":
+        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+        edges = edges.join(deg, "src").localCheckpoint(eager=False)
+    x = _spark_map(nodes, x0, "node").select("node", F.col("x").cast(kind).alias("x"))
+    for _ in range(iters):
+        sent = edges.join(x.filter(F.col("x").isNotNull()).withColumnRenamed("node", "src"), "src")
+        to = F.col("dst").alias("node")
+        if combine == "mode":
+            count = sent.groupBy(to, F.col("x").alias("label")).agg(F.count(F.lit(1)).alias("c"))
+            first = Window.partitionBy("node").orderBy(F.col("c").desc(), "label")
+            pick = count.withColumn("rn", F.row_number().over(first)).filter(F.col("rn") == 1)
+            x = x.join(pick.select("node", "label"), "node", "left").select(
+                "node", F.coalesce("label", "x").alias("x")
+            )
+        elif combine == "min":
+            relaxed = sent.select(to, (F.col("x") + w).cast(kind).alias("x"))
+            x = x.unionByName(relaxed).groupBy("node").agg(F.min("x").alias("x"))
+        else:
+            msg = F.col("x") / F.col("deg") if combine == "walk" else F.col("x") * w
+            s = sent.groupBy(to).agg(F.sum(msg).alias("s"))
+            x = nodes.join(s, "node", "left").select("node", F.coalesce("s", F.lit(0.0)).alias("s"))
+            x = _spark_map(x, post or (lambda s, node, m: s), "s", "node")
+        x = x.select("node", F.col("x").cast(kind).alias("x")).localCheckpoint(eager=False)
+    return x
+
+
+def _rounds_np(tbl: pa.Table, x0, combine: str, post, iters: int) -> tuple[pa.Array, pa.Array]:
+    """The rounds of `propagate` on its collected table: (sorted node
+    keys, values).  Sums run in the edge table's order; "min" holds an
+    unreached node as its dtype's largest value and "mode" rounds on
+    label codes, the positions of the label keys in sorted order."""
+    e = tbl.filter(pc.is_valid(tbl.column("dst")))
+    chunks = tbl.column("src").chunks + e.column("dst").chunks
+    keys = pc.unique(pa.chunked_array(chunks, type=tbl.schema.field("src").type))
+    keys = keys.take(pc.array_sort_indices(keys))
+    si, di = (pc.index_in(e.column(c), value_set=keys).to_numpy() for c in ("src", "dst"))
+    n, m = len(keys), _NumpyOps(len(keys))
+    node = keys.to_numpy(zero_copy_only=False)
+    w = e.column("w").to_numpy() if "w" in e.column_names else 1
+    deg = np.bincount(si, minlength=n)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        v = x0(node, m)
+        if combine == "mode":
+            x = pc.index_in(pa.array(v, type=keys.type), value_set=keys).to_numpy()
+        elif combine == "min":
+            v = np.ma.asarray(v)
+            v = v.astype(np.result_type(v, w))
+            top = np.iinfo(v.dtype).max if v.dtype.kind in "iu" else np.inf
+            x = np.broadcast_to(v.filled(top), (n,)).copy()
+        else:
+            x = np.broadcast_to(v, (n,)).astype(np.float64)
+        for _ in range(iters):
+            if combine == "mode":
+                x = _mode_round(x, x[si], di)
+            elif combine == "min":
+                ok = x[si] != top
+                np.minimum.at(x, di[ok], x[si[ok]] + (w[ok] if np.ndim(w) else w))
+            else:
+                # a walk divides per node: (x / deg)[s] is x[s] / deg[s] bit for bit
+                sent = (x / deg)[si] if combine == "walk" else x[si] * w
+                x = np.bincount(di, weights=sent, minlength=n)
+                if post is not None:
+                    x = np.broadcast_to(post(x, node, m), (n,)).astype(np.float64)
+    if combine == "mode":
+        return keys, keys.take(pa.array(x))
+    return keys, pa.array(x, mask=x == top if combine == "min" else None)
+
+
+def _mode_round(x: np.ndarray, got: np.ndarray, to: np.ndarray) -> np.ndarray:
+    """One "mode" round on label codes: node `to[i]` received label
+    `got[i]`; each receiver adopts its most frequent label, ties to the
+    smallest."""
+    if len(to) == 0:
+        return x
+    (to, got), count = np.unique(np.stack([to, got]), axis=1, return_counts=True)
+    first = np.lexsort((got, -count, to))
+    first = first[np.r_[True, to[first][1:] != to[first][:-1]]]
+    x = x.copy()
+    x[to[first]] = got[first]
+    return x
+
+
 def pagerank(
     edges: DataFrame,
     src: str = "src",
@@ -65,110 +272,42 @@ def pagerank(
     damping: float = 0.85,
     restart=None,
 ) -> DataFrame:
-    """PageRank over a directed edge list, fixed iteration count.
-    Simplified dangling treatment (their mass is dropped, the common
-    relational variant). Returns (node, rank), rank rounded to 6.
+    """PageRank over a directed edge list, fixed iteration count, on
+    `propagate`'s "walk" combine. Simplified dangling treatment (their
+    mass is dropped, the common relational variant). Returns
+    (node, rank), rank rounded to 6 (9 after every round).
 
     Restart: uniform by default — start 1/N and jump (1 − d)/N. With
     `restart`, a predicate on the node key written with operators a
     Spark Column and a NumPy array share (e.g. `lambda v: v % 17 == 0`),
     the walk restarts into that seed set only (personalized PageRank):
     seeds start at 1/|seeds| and jump (1 − d)·(1/|seeds|), the rest start
-    and jump at 0. Each form keeps the arithmetic of its SQL twin.
-
-    r10: the edge list is materialized ONCE (eager truncate) — callers
-    pass expensive lineages (the co-occurrence self-join), and the
-    iteration loop re-ran that lineage per round per consumer. The
-    driver-tail gate then reads the stored table, so an input above the
-    cap pays one bounded `limit` job, not a second derivation."""
-    edges = truncate(edges.select(F.col(src).alias(src), F.col(dst).alias(dst)))
-    local = small_side(edges, _DRIVER_EDGE_CAP)
-    if local is not None:
-        node, rank = _pagerank_np(local, iterations, damping, restart)
-        schema = StructType([
-            StructField("node", edges.schema[src].dataType),
-            StructField("rank", DoubleType()),
-        ])
-        ranks = edges.sparkSession.createDataFrame(
-            pa.table({"node": node, "rank": rank}), schema
-        )
-        return ranks.select("node", F.round("rank", 6).alias("rank"))
-    return _pagerank_distributed(edges, src, dst, iterations, damping, restart)
-
-
-def _pagerank_np(
-    edges: pa.Table, iterations: int, damping: float, restart=None
-) -> tuple[pa.Array, np.ndarray]:
-    """Every round of `pagerank` on a collected (src, dst) edge table:
-    (node keys in their Arrow type, 9-decimal ranks before the final
-    round to 6). Same sums as the distributed round — the inflow of a
-    node is Σ rank[src] / deg[src] over its in-edges, then
-    round(jump + d · inflow, 9) — with the summation order of the edge
-    table instead of the shuffle's."""
-    s, d = edges.column(0), edges.column(1)
-    node = pc.unique(pa.chunked_array(s.chunks + d.chunks, type=s.type))
-    si = pc.index_in(s, value_set=node).to_numpy()
-    di = pc.index_in(d, value_set=node).to_numpy()
-    n = len(node)
-    if n == 0:
-        return node, np.zeros(0)
-    deg = np.bincount(si, minlength=n).astype(np.float64)
-    if restart is None:
-        tele = np.full(n, 1.0 / n)
-        jump = (1.0 - damping) / n
-    else:
-        seed = np.asarray(restart(node.to_numpy(zero_copy_only=False)), dtype=bool)
-        ns = float(seed.sum())
-        tele = np.where(seed, 1.0 / ns if ns else 0.0, 0.0)
-        jump = (1.0 - damping) * tele
-    rank = round_half_up(tele, 9)
-    for _ in range(iterations):
-        inflow = np.bincount(di, weights=rank[si] / deg[si], minlength=n)
-        rank = round_half_up(jump + damping * inflow, 9)
-    return node, rank
-
-
-def _pagerank_distributed(
-    edges: DataFrame, src: str, dst: str, iterations: int, damping: float, restart=None
-) -> DataFrame:
-    """The relational rounds of `pagerank` over a materialized edge list."""
-    nodes = truncate(
-        edges.select(F.col(src).alias("node"))
-        .union(edges.select(F.col(dst).alias("node")))
-        .distinct()
+    and jump at 0. Each form keeps the arithmetic of its SQL twin."""
+    start, post = _pagerank_maps(damping, restart)
+    ranks = propagate(
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")),
+        start, "walk", post, iters=iterations,
     )
-    n = nodes.count()
-    if n == 0:
-        # empty graph (e.g. a co-occurrence window that matched nothing)
-        # → empty rank table, not a ZeroDivisionError at plan build
-        return nodes.select("node", F.lit(0.0).alias("rank")).limit(0)
-    if restart is None:
-        tele = F.lit(1.0 / n)
-        jump = F.lit((1.0 - damping) / n)
-    else:
-        is_seed = restart(F.col("node"))
-        ns = float(nodes.filter(is_seed).count())
-        tele = F.when(is_seed, F.lit(1.0 / ns if ns else 0.0)).otherwise(F.lit(0.0))
-        jump = (1.0 - damping) * tele
-    deg = truncate(edges.groupBy(src).agg(F.count(F.lit(1)).alias("deg")))
-    ranks = nodes.select("node", F.round(tele, 9).alias("rank"))
-    for _ in range(iterations):
-        contribs = (
-            edges.join(deg, src)
-            .join(ranks, F.col(src) == F.col("node"))
-            .select(F.col(dst).alias("node"), (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy("node")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .select(
-                "node",
-                F.round(jump + damping * F.coalesce(F.col("inflow"), F.lit(0.0)), 9).alias("rank"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return ranks.select("node", F.round("rank", 6).alias("rank"))
+    return ranks.select("node", F.round("x", 6).alias("rank"))
+
+
+def _pagerank_maps(damping: float, restart):
+    """PageRank's start vector and post-map for `propagate`."""
+
+    def tele(node, m):
+        if restart is None:
+            return 1.0 / m.total(1.0)
+        seed = restart(node)
+        return m.where(seed, 1.0 / m.total(m.where(seed, 1.0, 0.0)), 0.0)
+
+    def post(inflow, node, m):
+        if restart is None:
+            jump = (1.0 - damping) / m.total(1.0)
+        else:
+            jump = (1.0 - damping) * tele(node, m)
+        return m.round(jump + damping * inflow, 9)
+
+    return (lambda node, m: m.round(tele(node, m), 9)), post
 
 
 def undirected_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -352,47 +491,14 @@ def label_propagation(
 ) -> DataFrame:
     """Synchronous label-propagation community detection (Raghavan et al.
     2007, public algorithm), made DETERMINISTIC: each round every node
-    adopts the most frequent label among its neighbors, ties broken by
-    smallest label (the textbook random tie-break would not be
-    reproducible across partitionings, let alone engines).
+    adopts the most frequent label among its neighbors (the `dst` of its
+    edges), ties broken by smallest label (the textbook random tie-break
+    would not be reproducible across partitionings, let alone engines).
 
-    Returns (node, label) after `iterations` synchronous rounds; labels
-    start as the node's own id. Per round: one join keyed on the edge
-    destination + one (src, label) agg + one bounded per-src window
-    (frame = the node's distinct neighbor labels, degree-bounded) —
-    edges shuffle once per round, labels are |nodes|-sized.
-    localCheckpoint per round keeps lineage O(1).
-    """
-    from pyspark.sql import Window
-
-    # r10: materialize the caller's edge lineage once — each of the 3
-    # rounds re-joined `e`, whose unmaterialized lineage (typically the
-    # co-occurrence self-join) re-ran per round (8.9 s → ~3 s for
-    # q_label_prop at sf0.1).
-    e = truncate(edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst")))
-    nodes = (
-        e.select(F.col("e_src").alias("node"))
-        .unionByName(e.select(F.col("e_dst").alias("node")))
-        .distinct()
+    Returns (node, label) after `iterations` rounds of `propagate`'s
+    "mode" combine; labels start as the node's own id."""
+    labels = propagate(
+        edges.select(F.col(dst).alias("src"), F.col(src).alias("dst")),
+        lambda node, m: node, "mode", iters=iterations,
     )
-    labels = nodes.withColumn("label", F.col("node"))
-    w = Window.partitionBy("e_src").orderBy(F.col("c").desc(), F.col("label"))
-    for _ in range(iterations):
-        cnt = (
-            e.join(labels, e.e_dst == labels.node)
-            .groupBy("e_src", "label")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        pick = (
-            cnt.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select(F.col("e_src").alias("node"), F.col("label").alias("new_label"))
-        )
-        labels = (
-            labels.join(pick, "node", "left")
-            .select(
-                "node", F.coalesce("new_label", F.col("label")).alias("label")
-            )
-            .localCheckpoint(eager=False)
-        )
-    return labels
+    return labels.select("node", F.col("x").alias("label"))

@@ -213,7 +213,7 @@ def materialize_from_leaf(
     # file per zoom, so every zoom-pruned read ran as a single task
     # (bench_query 0.80×) and the extra exchange+AQE stage per write
     # inverted mask selectivity monotonicity).  Measured A/B
-    # (tools/hier_ab.py, one session, 3 alternated rounds, sf0.1):
+    # (d601b82:tools/hier_ab.py, one session, 3 alternated rounds, sf0.1):
     #   rebalance(zoom) both writes: load 1.62 query 1.50 mask10 1.19, 18 files
     #   no hint (r9):                load 1.37 query 1.13 mask10 0.97, 102 files
     #   leaf unhinted + upper rebalance(zoom, bucket8):

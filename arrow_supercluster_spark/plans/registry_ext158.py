@@ -41,6 +41,7 @@ import numpy as np
 
 from pyspark.sql import functions as F
 
+from arrow_supercluster_spark.operators import graph
 from arrow_supercluster_spark.plans.registry_core import register
 from arrow_supercluster_spark.plans.registry_ext import _emb
 from arrow_supercluster_spark.sources.tables import read_events
@@ -119,8 +120,8 @@ def q_katz_centrality(spark, sf_dir):
     """R452 — Katz on the mutual {k}-NN graph: x⁰ = 1, xᵗ⁺¹ = αAxᵗ + 1
     for {it} iterations at α = {a} (the Neumann truncation of
     (I−αA)⁻¹·1; with max degree ≤ {k}, αλ_max ≤ {k}·{a} = 0.25 and the
-    tail is < 0.25¹² ≈ 6e-8). Each iteration is one edge-join +
-    groupBy — the pagerank plan shape, k bounded joins total. Output:
+    tail is < 0.25¹² ≈ 6e-8), on graph.propagate's "sum" combine: every
+    iteration runs on the driver while the graph fits its cap. Output:
     every node's truncated Katz score, 6dp. SQL twin since r7: the
     DuckDB oracle unrolls the identical 12 iterations as generated
     CTEs (the q_pagerank/q_hits pattern), rebuilding the mutual-kNN
@@ -131,34 +132,15 @@ def q_katz_centrality(spark, sf_dir):
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
-    from arrow_supercluster_spark.functions.checkpoint import truncate
-
-    # r10: materialize edges/nodes once and checkpoint x per iteration —
-    # the old single 12-join-deep lazy tree spent most of its 23 s in
-    # Catalyst planning/stage compilation, not data (the graph is n·k
-    # rows); per-round truncate keeps every plan flat (the
-    # pagerank/label_prop discipline) and replaces the session
-    # persist().  Values are identical: truncate only materializes.
-    edges = truncate(mutual_knn_edges(emb, _KATZ_K))
-    nodes = truncate(emb.select(F.col("vec_id").alias("id")))
-    x = nodes.select("id", F.lit(1.0).alias("x"))
-    for _ in range(_KATZ_ITERS):
-        msg = (
-            edges.join(x, edges.dst == x.id)
-            .groupBy("src")
-            .agg(F.sum("x").alias("s"))
-        )
-        x = truncate(
-            nodes.join(msg, nodes.id == msg.src, "left")
-            .select(
-                "id",
-                (
-                    _KATZ_ALPHA * F.coalesce(F.col("s"), F.lit(0.0)) + 1.0
-                ).alias("x"),
-            )
-        )
+    # the mutual graph is symmetric, so x flowing src → dst is αAx
+    x = graph.propagate(
+        mutual_knn_edges(emb, _KATZ_K),
+        lambda node, m: 1.0, "sum",
+        lambda s, node, m: _KATZ_ALPHA * s + 1.0,
+        iters=_KATZ_ITERS, nodes=emb.select(F.col("vec_id").alias("node")),
+    )
     return x.select(
-        F.col("id").alias("vec_id"), F.round("x", 6).alias("katz")
+        F.col("node").alias("vec_id"), F.round("x", 6).alias("katz")
     ).orderBy("vec_id")
 
 

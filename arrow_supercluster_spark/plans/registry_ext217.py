@@ -28,6 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from arrow_supercluster_spark.operators import graph
 from arrow_supercluster_spark.plans.registry_core import register
 from arrow_supercluster_spark.plans.registry_ext import _emb
 from arrow_supercluster_spark.plans.registry_ext158 import mutual_knn_edges
@@ -98,42 +99,27 @@ def q_eigenvector_centrality(spark, sf_dir):
     x⁰ = 1, xᵗ⁺¹ = Axᵗ/‖Axᵗ‖₂ for {it} iterations — the un-damped
     prestige score (Katz without the +1 base, pagerank without the
     budget).  Isolated nodes stay exactly 0.  Each iteration is one
-    edge join + agg and one scalar norm; the SQL twin unrolls the
-    identical {it} steps (q_katz pattern).""".format(
+    graph.propagate "sum" round whose post-map divides by the norm
+    (`m.total`); the SQL twin unrolls the identical {it} steps (q_katz
+    pattern).""".format(
         k=_EC_K, it=_EC_ITERS
     )
     emb = _emb(spark, sf_dir).select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
-    edges = mutual_knn_edges(emb, _EC_K).persist()
-    nodes = emb.select(F.col("vec_id").alias("id"))
-    x = nodes.select("id", F.lit(1.0).alias("x"))
-    for _ in range(_EC_ITERS):
-        msg = (
-            edges.join(x, edges.dst == x.id)
-            .groupBy("src")
-            .agg(F.sum("x").alias("s"))
-        )
-        y = nodes.join(msg, nodes.id == msg.src, "left").select(
-            "id", F.coalesce(F.col("s"), F.lit(0.0)).alias("y")
-        )
-        nrm = y.agg(F.sqrt(F.sum(F.col("y") * F.col("y"))).alias("s"))
-        x = y.crossJoin(F.broadcast(nrm)).select(
-            "id",
-            F.when(F.col("s") > 0, F.col("y") / F.col("s"))
-            .otherwise(0.0)
-            .alias("x"),
-        )
-        # the norm makes x reference y twice; without an eager cut the
-        # logical plan doubles per iteration (2^12 by the last step)
-        x = x.localCheckpoint(eager=True)
-    out = x.select(
-        F.col("id").alias("vec_id"), F.round("x", 6).alias("eigencentrality")
+
+    def normalized(s, node, m):
+        nrm = m.sqrt(m.total(s * s))
+        return m.where(nrm > 0, s / nrm, 0.0)
+
+    x = graph.propagate(
+        mutual_knn_edges(emb, _EC_K), lambda node, m: 1.0, "sum", normalized,
+        iters=_EC_ITERS, nodes=emb.select(F.col("vec_id").alias("node")),
+    )
+    return x.select(
+        F.col("node").alias("vec_id"), F.round("x", 6).alias("eigencentrality")
     ).orderBy("vec_id")
-    out = out.localCheckpoint()  # cut the 12-join lineage
-    edges.unpersist()
-    return out
 
 
 @register(

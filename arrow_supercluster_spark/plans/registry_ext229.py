@@ -28,6 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from arrow_supercluster_spark.operators import graph
 from arrow_supercluster_spark.plans.registry_core import register
 from arrow_supercluster_spark.sources.tables import read_events
 
@@ -247,10 +248,11 @@ def q_bellman_ford(spark, sf_dir):
     '{src}' to every event type under the MLE transition graph, as a
     shortest path with integer −ln(P)·10⁶ edge weights (products of
     probabilities become exact integer sums — cross-engine-safe min
-    comparisons).  Each relaxation round is one join + min-agg; the
-    hop cap bounds the unroll, which IS the production 100 TB shape
-    for negative-cycle-free path queries (q_bfs_hops' weighted
-    sibling).  Oracle: the identical {k} rounds as materialized CTEs.""".format(
+    comparisons).  Each relaxation round is one graph.propagate "min"
+    round (unreached is null); the hop cap bounds the unroll, which IS
+    the production 100 TB shape for negative-cycle-free path queries
+    (q_bfs_hops' weighted sibling).  Oracle: the identical {k} rounds
+    as materialized CTEs.""".format(
         k=_BF_HOPS, src=_BF_SRC
     )
     from pyspark.sql import Window
@@ -265,43 +267,22 @@ def q_bellman_ford(spark, sf_dir):
     ).agg(F.count(F.lit(1)).alias("c"))
     outdeg = trans.groupBy("u").agg(F.sum("c").alias("tot"))
     edges = trans.join(outdeg, "u").select(
-        "u",
-        "v",
+        F.col("u").alias("src"),
+        F.col("v").alias("dst"),
         F.round(-F.log(F.col("c") * 1.0 / F.col("tot")) * _BF_SCALE)
         .cast("long")
         .alias("w"),
     )
-    nodes = (
-        edges.select(F.col("u").alias("id"))
-        .union(edges.select(F.col("v").alias("id")))
-        .distinct()
+    d = graph.propagate(
+        edges, lambda node, m: m.where(node == _BF_SRC, 0, None), "min",
+        iters=_BF_HOPS,
     )
-    d = nodes.select(
-        "id",
-        F.when(F.col("id") == _BF_SRC, F.lit(0).cast("long")).alias("dist"),
-    )
-    for _ in range(_BF_HOPS):
-        relaxed = (
-            edges.join(
-                d.filter(F.col("dist").isNotNull()).select(
-                    F.col("id").alias("u"), F.col("dist").alias("pd")
-                ),
-                "u",
-            )
-            .select(F.col("v").alias("id"), (F.col("pd") + F.col("w")).alias("dist"))
-        )
-        d = (
-            d.select("id", "dist")
-            .unionByName(relaxed)
-            .groupBy("id")
-            .agg(F.min("dist").alias("dist"))
-        )
     return (
-        d.filter(F.col("dist").isNotNull())
+        d.filter(F.col("x").isNotNull())
         .select(
-            F.col("id").alias("event_type"),
-            F.col("dist").alias("neg_log_prob_micro"),
-            F.round(F.exp(-(F.col("dist") * 1.0) / _BF_SCALE), 6).alias(
+            F.col("node").alias("event_type"),
+            F.col("x").alias("neg_log_prob_micro"),
+            F.round(F.exp(-(F.col("x") * 1.0) / _BF_SCALE), 6).alias(
                 "path_prob"
             ),
         )

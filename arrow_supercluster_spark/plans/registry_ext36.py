@@ -24,7 +24,8 @@ from arrow_supercluster_spark.sources.tables import read_events
 # ===========================================================================
 
 _BFS_MAX_HOPS = 3
-_BFS_SOURCES = "node % 50 = 0"  # deterministic seed set
+_BFS_SEED_MOD = 50  # deterministic seed set: node % 50 = 0
+_BFS_SOURCES = f"node % {_BFS_SEED_MOD} = 0"
 
 _SQL_BFS_EDGES = """
     edges AS (
@@ -56,33 +57,16 @@ _SQL_BFS_EDGES = """
 def q_bfs_hops(spark, sf_dir):
     """Graph family — multi-source BFS: minimum hop distance (≤ {h})
     from the deterministic seed set (node id % 50 = 0) over the user
-    co-occurrence graph. Frontier expansion is one join + one min-agg
-    per round (the connected-components loop with a hop counter);
-    frontiers stay |nodes|-bounded, the driver only counts rounds.
-    Oracle: recursive CTE minimizing hops — a different evaluation
-    strategy for the same fixpoint.""".format(h=_BFS_MAX_HOPS)
-    edges = graph.cooccurrence_edges(read_events(spark, sf_dir))
-    edges = edges.localCheckpoint(eager=False)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
+    co-occurrence graph, as graph.propagate's "min" combine with unit
+    weights: unreached nodes are null, every round relaxes hops + 1
+    along the edges. Oracle: recursive CTE minimizing hops — a
+    different evaluation strategy for the same fixpoint.""".format(h=_BFS_MAX_HOPS)
+    hops = graph.propagate(
+        graph.cooccurrence_edges(read_events(spark, sf_dir)),
+        lambda node, m: m.where(node % _BFS_SEED_MOD == 0, 0, None), "min",
+        iters=_BFS_MAX_HOPS,
     )
-    dist = nodes.filter(F.expr(_BFS_SOURCES)).select(
-        "node", F.lit(0).alias("hops")
-    )
-    for _ in range(_BFS_MAX_HOPS):
-        expanded = (
-            edges.join(dist, edges.src == dist.node)
-            .select(F.col("dst").alias("node"), (F.col("hops") + 1).alias("hops"))
-        )
-        dist = (
-            dist.unionByName(expanded)
-            .groupBy("node")
-            .agg(F.min("hops").alias("hops"))
-            .localCheckpoint(eager=False)
-        )
-    return dist
+    return hops.filter(F.col("x").isNotNull()).select("node", F.col("x").alias("hops"))
 
 
 # ===========================================================================

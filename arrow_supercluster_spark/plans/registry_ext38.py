@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from arrow_supercluster_spark.operators import graph
 from arrow_supercluster_spark.plans.registry_core import register
 from arrow_supercluster_spark.sources.tables import read_events
 
@@ -88,21 +89,13 @@ def q_hits(spark, sf_dir):
     L2 norm — the PageRank loop with two interleaved score vectors.
     Scores re-round to 9 per half-round (summation-order discipline);
     the oracle unrolls all six half-rounds as CTEs."""
-    ev = read_events(spark, sf_dir).select(
-        "user_id", "event_type", F.date_trunc("hour", "ts").alias("h")
-    )
-    a_side = ev.select(F.col("user_id").alias("src"), "event_type", "h")
-    b_side = ev.select(F.col("user_id").alias("dst"), "event_type", "h")
     from arrow_supercluster_spark.functions.checkpoint import truncate
 
     # r10: edges and nodes materialized once — the six half-rounds each
     # re-joined `nodes`, whose unmaterialized distinct re-ran the
     # co-occurrence self-join per half-round.
     edges = truncate(
-        a_side.join(b_side, ["event_type", "h"])
-        .filter(F.col("src") < F.col("dst"))
-        .select("src", "dst")
-        .distinct()
+        graph.cooccurrence_edges(read_events(spark, sf_dir)).filter(F.col("src") < F.col("dst"))
     )
     nodes = truncate(
         edges.select(F.col("src").alias("node"))

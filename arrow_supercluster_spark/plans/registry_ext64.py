@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
+from arrow_supercluster_spark.operators import graph
 from arrow_supercluster_spark.plans.registry_core import register
 from arrow_supercluster_spark.sources.tables import read_events
 
@@ -64,10 +65,11 @@ def q_markov_stationary(spark, sf_dir):
     power steps v ← vᵀP from uniform (the empirical transition matrix
     of q_event_transitions; with 5 states this is effectively the
     stationary mix — where user behavior settles regardless of entry
-    point). P is a |states|² table; each step is one tiny join+agg,
-    re-rounded to 9 (the PageRank discipline); the oracle unrolls all
-    three steps. Mass is NOT conserved exactly (terminal events leak
-    probability — the absorbing-boundary effect, visible as Σw < 1)."""
+    point). P is a |states|² table; each step is one graph.propagate
+    "sum" round weighted by p, re-rounded to 9 (the PageRank
+    discipline); the oracle unrolls all three steps. Mass is NOT
+    conserved exactly (terminal events leak probability — the
+    absorbing-boundary effect, visible as Σw < 1)."""
     ev = read_events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = ev.select(
@@ -79,23 +81,14 @@ def q_markov_stationary(spark, sf_dir):
     )
     rowsum = trans.groupBy("a").agg(F.sum("c").alias("tot"))
     p = trans.join(rowsum, "a").select(
-        "a", "b", F.round(F.col("c") * 1.0 / F.col("tot"), 9).alias("p")
-    ).localCheckpoint(eager=False)
-    states = ev.select(F.col("event_type").alias("s")).distinct()
-    n = states.count()
-    v = states.withColumn("w", F.lit(1.0 / n))
-    for _ in range(_MS_STEPS):
-        stepped = (
-            p.join(v.select(F.col("s").alias("a"), "w"), "a")
-            .groupBy(F.col("b").alias("s"))
-            .agg(F.round(F.sum(F.col("w") * F.col("p")), 9).alias("w"))
-        )
-        v = (
-            states.join(stepped, "s", "left")
-            .select("s", F.coalesce("w", F.lit(0.0)).alias("w"))
-            .localCheckpoint(eager=False)
-        )
-    return v.select(F.col("s").alias("event_type"), F.round("w", 6).alias("weight"))
+        F.col("a").alias("src"), F.col("b").alias("dst"),
+        F.round(F.col("c") * 1.0 / F.col("tot"), 9).alias("w"),
+    )
+    v = graph.propagate(
+        p, lambda node, m: 1.0 / m.total(1.0), "sum", lambda s, node, m: m.round(s, 9),
+        iters=_MS_STEPS, nodes=ev.select(F.col("event_type").alias("node")).distinct(),
+    )
+    return v.select(F.col("node").alias("event_type"), F.round("x", 6).alias("weight"))
 
 
 @register(

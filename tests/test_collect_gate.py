@@ -58,8 +58,10 @@ ALLOWLIST: dict[str, str] = {
     "functions/small_side.py::small_side":
         "limit(cap + 1): at most cap + 1 rows per call, one job (the "
         "callers' literal caps: connected_components_adaptive's 200k "
-        "edges, the radius hierarchy's _DRIVER_LEVEL_CAP, pagerank's "
-        "_DRIVER_EDGE_CAP of 2M edges, greedy cc's _CC_EDGE_CAP of 200k "
+        "edges, the radius hierarchy's _DRIVER_LEVEL_CAP, graph.propagate's "
+        "_DRIVER_EDGE_CAP of 2M rows (edges plus isolated start nodes) for "
+        "pagerank, label_propagation and the katz, eigenvector, markov, "
+        "bfs and bellman-ford registry queries, greedy cc's _CC_EDGE_CAP of 200k "
         "candidate edges per lookahead probe, triangle_counts' "
         "_TRI_BITSET_MAX_NODES of 16384 distinct nodes, the grid engine's "
         "_RESIDENT_NODE_CAP of 1M finalized nodes and its "
